@@ -2,9 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-
-import graft.functions.{MinHashSignatureExpr, SimHash64Expr}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /**
  * Session extensions exposing graft's native Catalyst expressions to SQL:
@@ -12,7 +10,7 @@ import graft.functions.{MinHashSignatureExpr, SimHash64Expr}
  * {{{
  *   SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
  *   // or: --conf spark.sql.extensions=graft.GraftExtensions
- *   spark.sql("SELECT minhash_signature(shingles, 64) FROM docs")
+ *   spark.sql("SELECT eth_event_selector('Transfer(address,address,uint256)')")
  * }}}
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -22,45 +20,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  private def intArg(e: Expression, what: String): Int = e match {
-    case Literal(v: Int, _)  => v
-    case Literal(v: Long, _) => v.toInt
-    case other               => throw new IllegalArgumentException(s"$what must be a literal, got $other")
-  }
-  private def longArg(e: Expression, what: String): Long = e match {
-    case Literal(v: Int, _)  => v.toLong
-    case Literal(v: Long, _) => v
-    case other               => throw new IllegalArgumentException(s"$what must be a literal, got $other")
-  }
-
   /** (identifier, info, builder) triples — also usable directly against a
     * session's FunctionRegistry. */
   val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (
-      new FunctionIdentifier("minhash_signature"),
-      new ExpressionInfo(classOf[MinHashSignatureExpr].getName, "minhash_signature"),
-      (args: Seq[Expression]) =>
-        args match {
-          case Seq(arr)          => MinHashSignatureExpr(arr, 64, 42L)
-          case Seq(arr, k)       => MinHashSignatureExpr(arr, intArg(k, "numHashes"), 42L)
-          case Seq(arr, k, seed) =>
-            MinHashSignatureExpr(arr, intArg(k, "numHashes"), longArg(seed, "seed"))
-          case other =>
-            throw new IllegalArgumentException(
-              s"minhash_signature(arr[, numHashes[, seed]]) got ${other.size} args")
-        }
-    ),
-    (
-      new FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64Expr].getName, "simhash64"),
-      (args: Seq[Expression]) =>
-        args match {
-          case Seq(arr)       => SimHash64Expr(arr, 42L)
-          case Seq(arr, seed) => SimHash64Expr(arr, longArg(seed, "seed"))
-          case other =>
-            throw new IllegalArgumentException(s"simhash64(arr[, seed]) got ${other.size} args")
-        }
-    ),
     (
       new FunctionIdentifier("keccak256"),
       new ExpressionInfo(classOf[graft.functions.Keccak256Expr].getName, "keccak256"),

@@ -3533,8 +3533,9 @@ object SparkEntry {
 
     // ---- LSH ANN + embedding near-dup (BASELINE.json north star), on
     // quantized vectors + integer planes so bucket assignment and cosine are
-    // exact integer arithmetic — hash-checkable against the SQL oracle (the
-    // float-plane production path in Similarity/Dedup is spec-tested).
+    // exact integer arithmetic — hash-checkable against the SQL oracle. This
+    // is the only sign-LSH family; over float vectors there is just the exact,
+    // unbucketed Similarity.bruteForceTopK.
     "ann_lsh" -> { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val planes = Similarity.intPlanes(numPlanes = 6, dim = 64, seed = 42L)
@@ -3557,7 +3558,7 @@ object SparkEntry {
         .filter(col("qid") =!= col("cid"))
         .withColumn(
           "cos",
-          when(nn > 0, Similarity.intDotFixed(col("qv"), col("cv"), 64).cast("double") / nn)
+          when(nn > 0, Similarity.intDot(col("qv"), col("cv")).cast("double") / nn)
             .otherwise(lit(0.0))
         )
         .withColumn("rnk", row_number().over(w).cast("bigint"))
@@ -3591,7 +3592,7 @@ object SparkEntry {
         .filter(col("qid") =!= col("cid"))
         .withColumn(
           "cos",
-          when(nn > 0, Similarity.intDotFixed(col("qv"), col("cv"), 64).cast("double") / nn)
+          when(nn > 0, Similarity.intDot(col("qv"), col("cv")).cast("double") / nn)
             .otherwise(lit(0.0)))
         .withColumn("rnk", row_number().over(w).cast("bigint"))
         .filter(col("rnk") <= 5)

@@ -2,45 +2,33 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.{columnOf, expressionOf}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /**
- * Native Catalyst expressions for the fuzzy-dedup hot path.
+ * Native Catalyst expressions for the fuzzy-dedup and vector hot paths.
  *
  * The oracle-checkable MinHash/SimHash operators in [[graft.operators.Dedup]]
- * are built from `aggregate`/`zip_with`/`transform` higher-order functions —
- * correct and portable, but HOFs are `CodegenFallback`: every element runs
- * through the interpreted expression evaluator with boxing. These
- * expressions compute the same signatures in one tight JVM loop per row
- * (xxhash64 per element, k running minima / 64 bit-votes), participate in
- * whole-stage codegen, and exist for the scale path where cross-engine hash
- * portability is not needed. Speed family: xxhash64 (Spark's internal XXH64,
- * the same kernel `functions.xxhash64` uses).
+ * have a higher-order-function spelling (`aggregate`/`zip_with`/`transform`)
+ * that is correct and portable but `CodegenFallback`: every element runs
+ * through the interpreted expression evaluator with boxing. The portable
+ * expressions here compute the same md5-derived values in one tight JVM loop
+ * per row and take part in whole-stage codegen, so the DuckDB oracle can
+ * recompute every signature they produce. The integer-vector kernels are
+ * pure arithmetic and equally portable.
  */
 object HashExpressions {
-
-  /** Column API: MinHash signature of an array<string> column — k minima of
-    * seeded xxhash64 over the elements. */
-  def minhashSignatureFast(shingles: Column, numHashes: Int, seed: Long = 42L): Column =
-    columnOf(MinHashSignatureExpr(expressionOf(shingles), numHashes, seed))
-
-  /** Column API: 64-bit SimHash of an array<string> column, packed into a
-    * long (bit j set when the signed vote of hash-bit j is positive). */
-  def simhash64Fast(tokens: Column, seed: Long = 42L): Column =
-    columnOf(SimHash64Expr(expressionOf(tokens), seed))
 
   /** Column API: exact integer dot product of two array<long> columns in one
     * tight JVM loop. Value-identical to the `aggregate(zip_with(...))`
     * formulation (and to a flat `element_at` sum), so operators built on it
-    * stay DuckDB-oracle-checkable — unlike the hash expressions above, this
-    * is a pure-arithmetic kernel with no portability caveat. Exists because
-    * BOTH spellings fall off whole-stage codegen at embedding dimensions
-    * (HOFs are CodegenFallback; a dim-64 element_at sum blows the generated-
-    * method budget), measured 3.5-9x slower on the near-dup verify stage. */
+    * stay DuckDB-oracle-checkable. Exists because BOTH spellings fall off
+    * whole-stage codegen at embedding dimensions (HOFs are CodegenFallback;
+    * a dim-64 element_at sum blows the generated-method budget), measured
+    * 3.5-9x slower on the near-dup verify stage. */
   def longDot(a: Column, b: Column): Column =
     columnOf(LongDotExpr(expressionOf(a), expressionOf(b)))
 
@@ -95,92 +83,6 @@ private[functions] object PortableMd5 {
     while (i < 8) { v = (v << 8) | (h(i) & 0xffL); i += 1 }
     v
   }
-}
-
-/** k-minima MinHash signature: `array<string> -> array<long>` (length k,
-  * never null elements). Empty input yields Long.MaxValue minima —
-  * deterministic, and two empty docs still collide as identical. */
-case class MinHashSignatureExpr(child: Expression, numHashes: Int, seed: Long)
-    extends UnaryExpression {
-  require(numHashes > 0, "numHashes must be positive")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(s"$prettyName requires array<string>, got $other")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_signature"
-
-  override def nullSafeEval(input: Any): Any =
-    new GenericArrayData(
-      MinHashSignatureExpr.compute(input.asInstanceOf[ArrayData], numHashes, seed)
-    )
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c =>
-        s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-           |  graft.functions.MinHashSignatureExpr.compute($c, $numHashes, ${seed}L));""".stripMargin
-    )
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSignatureExpr =
-    copy(child = newChild)
-}
-
-object MinHashSignatureExpr {
-  /** One pass over the elements; no boxing, no per-element expression trees.
-    * Called from both interpreted eval and generated code. */
-  def compute(arr: ArrayData, k: Int, seed: Long): Array[Long] = {
-    val mins = Array.fill(k)(Long.MaxValue)
-    val n = arr.numElements()
-    var i = 0
-    while (i < n) {
-      if (!arr.isNullAt(i)) {
-        val h = XXH64.hashUTF8String(arr.getUTF8String(i), seed)
-        var j = 0
-        while (j < k) {
-          // j-th hash function = one extra xxh64 avalanche of (h, seed+j):
-          // cheap, and decorrelates the k functions properly (affine mixes
-          // of one base hash would give correlated minima).
-          val v = XXH64.hashLong(h, seed + j)
-          if (v < mins(j)) mins(j) = v
-          j += 1
-        }
-      }
-      i += 1
-    }
-    mins
-  }
-}
-
-/** 64-bit SimHash: `array<string> -> long`. Bit j of the result is set when
-  * the sum of ±1 votes from bit j of each element's xxhash64 is positive. */
-case class SimHash64Expr(child: Expression, seed: Long)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(s"$prettyName requires array<string>, got $other")
-  }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash64"
-
-  override def nullSafeEval(input: Any): Any =
-    SimHash64Expr.compute(input.asInstanceOf[ArrayData], seed)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c => s"${ev.value} = graft.functions.SimHash64Expr.compute($c, ${seed}L);"
-    )
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64Expr =
-    copy(child = newChild)
 }
 
 /** Dot product with a literal weight vector: `array<long> -> long`, summed
@@ -423,31 +325,5 @@ object LongDotExpr {
       i += 1
     }
     acc
-  }
-}
-
-object SimHash64Expr {
-  def compute(arr: ArrayData, seed: Long): Long = {
-    val votes = new Array[Int](64)
-    val n = arr.numElements()
-    var i = 0
-    while (i < n) {
-      if (!arr.isNullAt(i)) {
-        val h = XXH64.hashUTF8String(arr.getUTF8String(i), seed)
-        var j = 0
-        while (j < 64) {
-          if (((h >>> j) & 1L) == 1L) votes(j) += 1 else votes(j) -= 1
-          j += 1
-        }
-      }
-      i += 1
-    }
-    var out = 0L
-    var j = 0
-    while (j < 64) {
-      if (votes(j) > 0) out |= (1L << j)
-      j += 1
-    }
-    out
   }
 }

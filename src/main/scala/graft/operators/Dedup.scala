@@ -617,34 +617,6 @@ object Dedup {
   }
 
   /**
-   * Scale-path MinHash LSH: identical banding/verification shape, signatures
-   * from the codegen'd [[graft.functions.MinHashSignatureExpr]] (xxhash64
-   * family — one tight JVM loop per row instead of interpreted higher-order
-   * functions; NOT cross-engine hash-portable, so the DuckDB oracle covers
-   * [[minHashLsh]] and this path is spec-tested against it).
-   */
-  def minHashLshFast(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleLen: Int = 3,
-      numHashes: Int = 64,
-      bands: Int = 16,
-      minSim: Double = 0.6,
-      maxBucket: Int = 1000
-  ): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands evenly")
-    val sigs = ensureParallelism(df)
-      .select(
-        col(idCol).as("id"),
-        graft.functions.HashExpressions
-          .minhashSignatureFast(Text.wordShingles(col(textCol), shingleLen), numHashes)
-          .as("sig")
-      )
-    lshPairsFromSignatures(sigs, numHashes, bands, minSim, maxBucket)
-  }
-
-  /**
    * Materialize a REUSABLE MinHash LSH index of a corpus: the incremental
    * form of [[minHashLsh]]. Two bucketed tables are written —
    * `<table>_buckets` (band, bkey, id), bucketed by (band, bkey), giant
@@ -655,10 +627,6 @@ object Dedup {
    * new batch moves. This is the dedup analog of the dataset model's
    * incremental transforms — at 100 TB the corpus is banded once at ingest,
    * and each increment pays O(new batch), not O(corpus).
-   *
-   * `fast = true` switches to the codegen'd xxhash64 signature kernel (not
-   * cross-engine portable; the DuckDB oracle covers the portable family,
-   * and the fast family is spec-tested equal in shape).
    */
   def materializeMinhashIndex(
       df: DataFrame,
@@ -669,15 +637,14 @@ object Dedup {
       numHashes: Int = 64,
       bands: Int = 16,
       maxBucket: Int = 1000,
-      numBuckets: Int = 64,
-      fast: Boolean = false
+      numBuckets: Int = 64
   ): Unit = {
     require(numHashes % bands == 0, "numHashes must divide into bands evenly")
     val r = numHashes / bands
     val spark = df.sparkSession
     val sigs = ensureParallelism(df).select(
       col(idCol).as("id"),
-      signatureOf(col(textCol), shingleLen, numHashes, fast).as("sig")
+      minHashSignature(Text.wordShingles(col(textCol), shingleLen), numHashes).as("sig")
     ).persist(StorageLevel.MEMORY_AND_DISK)
     val banded = sigs
       .select(col("id"), posexplode(bandKeys(col("sig"), bands, r)).as(Seq("band", "bkey")))
@@ -740,8 +707,7 @@ object Dedup {
       shingleLen: Int = 3,
       numHashes: Int = 64,
       bands: Int = 16,
-      maxBucket: Int = 1000,
-      fast: Boolean = false
+      maxBucket: Int = 1000
   ): Unit = {
     require(numHashes % bands == 0, "numHashes must divide into bands evenly")
     val r = numHashes / bands
@@ -750,7 +716,7 @@ object Dedup {
     val newSigs = ensureParallelism(newDocs)
       .select(
         col(idCol).as("id"),
-        signatureOf(col(textCol), shingleLen, numHashes, fast).as("sig"))
+        minHashSignature(Text.wordShingles(col(textCol), shingleLen), numHashes).as("sig"))
       .join(known, Seq("id"), "left_anti")
       .persist(StorageLevel.MEMORY_AND_DISK)
     val bucketsTable = s"${table}_buckets"
@@ -787,7 +753,7 @@ object Dedup {
 
   /**
    * Near-dup pairs of a NEW batch against a corpus indexed by
-   * [[materializeMinhashIndex]] (same shingleLen/numHashes/bands/fast as at
+   * [[materializeMinhashIndex]] (same shingleLen/numHashes/bands as at
    * materialization — the index stores banded keys, not parameters).
    * Returns (id_new, id_corpus, est_jaccard) with `est_jaccard >= minSim`;
    * rows whose ids collide with their own corpus entry (re-ingest of an
@@ -807,11 +773,10 @@ object Dedup {
       shingleLen: Int = 3,
       numHashes: Int = 64,
       bands: Int = 16,
-      minSim: Double = 0.6,
-      fast: Boolean = false
+      minSim: Double = 0.6
   ): DataFrame = {
     val (out, newSigs) =
-      probeIndexPlan(newDocs, idCol, textCol, table, shingleLen, numHashes, bands, minSim, fast)
+      probeIndexPlan(newDocs, idCol, textCol, table, shingleLen, numHashes, bands, minSim)
     // checkpoint: the probe fans out to several consumers (dedup decision,
     // cluster pairs) and the persisted batch signatures can be released
     val cp = out.localCheckpoint()
@@ -831,15 +796,14 @@ object Dedup {
       shingleLen: Int,
       numHashes: Int,
       bands: Int,
-      minSim: Double,
-      fast: Boolean
+      minSim: Double
   ): (DataFrame, DataFrame) = {
     require(numHashes % bands == 0, "numHashes must divide into bands evenly")
     val r = numHashes / bands
     val spark = newDocs.sparkSession
     val newSigs = ensureParallelism(newDocs).select(
       col(idCol).as("id_new"),
-      signatureOf(col(textCol), shingleLen, numHashes, fast).as("sig_new")
+      minHashSignature(Text.wordShingles(col(textCol), shingleLen), numHashes).as("sig_new")
     ).persist(StorageLevel.MEMORY_AND_DISK)
     val newBanded = newSigs.select(
       col("id_new"),
@@ -889,19 +853,16 @@ object Dedup {
       numHashes: Int = 64,
       bands: Int = 16,
       minSim: Double = 0.6,
-      maxBucket: Int = 1000,
-      fast: Boolean = false
+      maxBucket: Int = 1000
   ): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands evenly")
     val r = numHashes / bands
     val docSigs = ensureParallelism(docs).select(
       col(idCol).as("__did"),
-      signatureOf(col(textCol), shingleLen, numHashes, fast).as("__dsig"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      minHashSignature(Text.wordShingles(col(textCol), shingleLen), numHashes).as("__dsig"))
     val refSigs = ensureParallelism(refDocs).select(
       col(refIdCol).as("__rid"),
-      signatureOf(col(refTextCol), shingleLen, numHashes, fast).as("__rsig"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      minHashSignature(Text.wordShingles(col(refTextCol), shingleLen), numHashes).as("__rsig"))
     val docBanded = docSigs.select(
       col("__did"), posexplode(bandKeys(col("__dsig"), bands, r)).as(Seq("band", "bkey")))
     val refBanded = refSigs
@@ -926,18 +887,8 @@ object Dedup {
       .filter(col("__est") >= minSim)
       .select(col("__did").as(idCol))
       .distinct()
-    val out = docs.join(hits, Seq(idCol), "left_anti")
-    docSigs.unpersist(blocking = false)
-    refSigs.unpersist(blocking = false)
-    out
+    docs.join(hits, Seq(idCol), "left_anti")
   }
-
-  /** Signature family selector shared by the batch and index paths. */
-  private def signatureOf(text: Column, shingleLen: Int, k: Int, fast: Boolean): Column =
-    if (fast)
-      graft.functions.HashExpressions
-        .minhashSignatureFast(Text.wordShingles(text, shingleLen), k)
-    else minHashSignature(Text.wordShingles(text, shingleLen), k)
 
   /** Shared LSH tail: band the (id, sig) frame, bucket-join candidate pairs,
     * verify by signature agreement. See [[minHashLsh]] for the scale notes. */
@@ -1115,57 +1066,6 @@ object Dedup {
   }
 
   /**
-   * Scale-path SimHash near-dups: packed-long simhash from the codegen'd
-   * [[graft.functions.SimHash64Expr]], pigeonhole chunk keys by bit-shifts,
-   * exact Hamming verify via `bit_count(xor)` — every step whole-stage
-   * codegen'd (the bit-string variant [[simHashDups]] stays as the
-   * oracle-portable path).
-   */
-  def simHashDupsFast(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      maxHamming: Int = 3,
-      maxBucket: Int = 256
-  ): DataFrame = {
-    val chunks = maxHamming + 1
-    val bitsPer = 64 / chunks
-    val mask = (1L << bitsPer) - 1
-    val chunked = ensureParallelism(df)
-      .select(
-        col(idCol).as("id"),
-        graft.functions.HashExpressions.simhash64Fast(Text.tokens(col(textCol))).as("sh")
-      )
-      .select(
-        col("id"),
-        col("sh"),
-        posexplode(
-          array((0 until chunks).map(ci =>
-            shiftrightunsigned(col("sh"), ci * bitsPer).bitwiseAND(lit(mask))): _*)
-        ).as(Seq("chunk", "ckey"))
-      )
-    // Same degenerate-bucket cap as the portable path above.
-    val cappedC = chunked
-      .withColumn(
-        "__rn",
-        row_number().over(Window.partitionBy(col("chunk"), col("ckey")).orderBy(col("id")))
-      )
-      .filter(col("__rn") <= maxBucket)
-      .drop("__rn")
-    val a = cappedC.select(col("chunk"), col("ckey"), col("id").as("id_a"), col("sh").as("sh_a"))
-    val b = cappedC.select(col("chunk"), col("ckey"), col("id").as("id_b"), col("sh").as("sh_b"))
-    a.join(b, Seq("chunk", "ckey"))
-      .filter(col("id_a") < col("id_b"))
-      .select(
-        col("id_a"),
-        col("id_b"),
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("bigint").as("hamming")
-      )
-      .filter(col("hamming") <= maxHamming)
-      .dropDuplicates("id_a", "id_b")
-  }
-
-  /**
    * Edit-distance verification of candidate pairs — the character-level
    * complement of [[ngramJaccard]]'s token-level verify (catches the
    * near-dups shingles miss: OCR noise, single-char edits inside words).
@@ -1245,7 +1145,7 @@ object Dedup {
   /**
    * Connected components over a near-dup pair list — the clustering stage of
    * a fuzzy-dedup pipeline (pairs from [[minHashLsh]]/[[simHashDups]]/
-   * [[embeddingDups]] → clusters → one canonical doc per cluster).
+   * [[embeddingDupsQuantized]] → clusters → one canonical doc per cluster).
    *
    * Min-label propagation WITH per-round pointer jumping (r18): each vertex
    * takes the min label among itself and its neighbors, then additionally
@@ -1329,90 +1229,11 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .withColumn(
         "cos",
-        when(nn > 0, Similarity.intDotFixed(col("va"), col("vb"), dim).cast("double") / nn)
+        when(nn > 0, Similarity.intDot(col("va"), col("vb")).cast("double") / nn)
           .otherwise(lit(0.0))
       )
       .filter(col("cos") >= minCos)
       .select(col("id_a"), col("id_b"), col("cos"))
-  }
-
-  /**
-   * Connected components by alternating large-star / small-star rounds
-   * (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-   * converges in O(log n) rounds regardless of graph diameter, where the
-   * min-label propagation of [[connectedComponents]] needs O(diameter)
-   * rounds. Dedup graphs are near-cliques, so label propagation usually
-   * wins there; use THIS variant when components can be long chains
-   * (entity-resolution edges, citation paths, linked-record graphs).
-   *
-   * Every round is two shuffles (a groupBy per star step) over an edge set
-   * that only shrinks toward the star form; convergence is detected by an
-   * order-independent edge-set checksum, no driver-side edge collection.
-   * Returns (id, comp) with comp = min id of the component, exactly like
-   * [[connectedComponents]].
-   */
-  def connectedComponentsLargeStar(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
-    val allIds = pairs
-      .select(col("id_a").as("id"))
-      .unionByName(pairs.select(col("id_b").as("id")))
-      .distinct()
-      .localCheckpoint()
-    // canonical direction: src > dst
-    var edges = pairs
-      .filter(col("id_a") =!= col("id_b"))
-      .select(
-        greatest(col("id_a"), col("id_b")).as("src"),
-        least(col("id_a"), col("id_b")).as("dst"))
-      .distinct()
-      .localCheckpoint()
-
-    def checksum(e: DataFrame): (Long, Long) = {
-      val r = e.agg(
-        count(lit(1)).as("n"),
-        coalesce(expr("bit_xor(xxhash64(src, dst))"), lit(0L)).as("x")
-      ).head()
-      (r.getLong(0), r.getLong(1))
-    }
-
-    var prev = (-1L, -1L)
-    var cur = checksum(edges)
-    var i = 0
-    while (cur != prev && i < maxIter) {
-      // LARGE-STAR: for each node u, link every LARGER neighbor v to
-      // m = min(neighborhood(u) ∪ {u}).
-      val sym = edges
-        .select(col("src").as("u"), col("dst").as("v"))
-        .unionByName(edges.select(col("dst").as("u"), col("src").as("v"))) // symmetric view
-      val minN = sym.groupBy("u").agg(min(least(col("v"), col("u"))).as("m"))
-      val large = sym
-        .join(minN, "u")
-        .filter(col("v") > col("u"))
-        .select(col("v").as("src"), col("m").as("dst")) // v > u >= m keeps src > dst
-        .filter(col("src") =!= col("dst"))
-        .distinct()
-      // SMALL-STAR: for each node u, link every SMALLER-or-self neighbor to
-      // m = min(smaller-neighborhood(u) ∪ {u}).
-      val m2 = large.groupBy("src").agg(min(col("dst")).as("m"))
-      val small = large
-        .join(m2, "src")
-        .select(col("dst").as("u"), col("m"))
-        .unionByName(m2.select(col("src").as("u"), col("m")))
-        .filter(col("u") =!= col("m"))
-        .select(col("u").as("src"), col("m").as("dst"))
-        .distinct()
-        .localCheckpoint()
-      edges = small
-      prev = cur
-      cur = checksum(edges)
-      i += 1
-    }
-    require(cur == prev, s"connectedComponentsLargeStar did not converge in $maxIter rounds")
-    // Fixpoint = stars: every non-root points straight at its component min.
-    val comps = edges.select(col("src").as("id"), col("dst").as("comp"))
-    val roots = allIds
-      .join(comps, Seq("id"), "left_anti")
-      .select(col("id"), col("id").as("comp"))
-    comps.unionByName(roots)
   }
 
   /**
@@ -1489,7 +1310,7 @@ object Dedup {
   /**
    * Materialize the persistent cluster index of a near-dup pair set.
    * `pairs` must carry `id_a`/`id_b` (the output shape of [[minHashLsh]],
-   * [[simHashDups]], [[embeddingDups]]); only ids that appear in at least
+   * [[simHashDups]], [[embeddingDupsQuantized]]); only ids that appear in at least
    * one pair get rows — ids in no pair are their own cluster by convention
    * (exactly [[keepCanonical]]'s null-comp rule).
    */
@@ -1646,102 +1467,29 @@ object Dedup {
   }
 
   /**
-   * Embedding near-dup pairs: cosine similarity above `minCos`, candidates
-   * from sign-LSH buckets (see [[Similarity.hyperplaneBucket]]).
+   * Embedding near-dup pairs over quantized vectors (see
+   * [[Similarity.quantize]]): cosine similarity above `minCos`, candidates
+   * from sign-LSH buckets over explicit integer `planes` (see
+   * [[Similarity.intPlaneBucket]]). Cosine is exact integer dot / sqrt'd
+   * integer norms — bit-identical across engines, so this path is DuckDB-
+   * oracle-checkable. The ad-hoc twin of [[embeddingDupsFromTable]]: same
+   * math, but buckets computed on the fly instead of read from a bucketed
+   * table.
    *
    * Same scale discipline as [[lshPairsFromSignatures]]: the bucket
-   * self-join shuffles ONLY (bucket, id) rows — vectors and norms stay in a
-   * persisted side table and are joined back onto the (small) surviving
-   * candidate-pair set for cosine verification, so the wide `Array[Float]`
-   * column never rides the candidate-generation exchange. Degenerate buckets
-   * (near-zero or boilerplate embeddings hashing to one sign pattern) are
-   * capped at `maxBucket` docs, bounding the quadratic pair-up the same way
-   * the MinHash (1000) and SimHash (256) tails do.
+   * self-join shuffles ONLY (bucket, id) rows — vectors and squared norms
+   * stay in a persisted side table and are joined back onto the (small)
+   * surviving candidate-pair set for cosine verification, so the wide
+   * vector column never rides the candidate-generation exchange. Degenerate
+   * buckets (near-zero or boilerplate embeddings hashing to one sign
+   * pattern) are capped at `maxBucket` docs, bounding the quadratic pair-up
+   * the same way the MinHash (1000) and SimHash (256) tails do.
    *
    * Recall caveat (shared with every capped LSH tail here): docs beyond
    * `maxBucket` in one bucket contribute no candidate pairs from that
    * bucket. The cap triggers only on degenerate near-identical content,
    * where the surviving `maxBucket` members already chain the cluster
    * together for [[connectedComponents]].
-   */
-  def embeddingDups(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      dim: Int,
-      minCos: Double = 0.95,
-      numPlanes: Int = 12,
-      maxBucket: Int = 1000
-  ): DataFrame = {
-    val (vecs, frame) = embeddingDupsFrame(df, idCol, vecCol, dim, minCos, numPlanes, maxBucket)
-    // cut lineage back so the vector cache can be released immediately
-    val out = frame.localCheckpoint()
-    vecs.unpersist(blocking = false)
-    out
-  }
-
-  /** [[embeddingDups]] before its lineage cut — (persisted vector table,
-    * lazy result frame), so `PlanSpec` can assert the exchange shapes. */
-  private[graft] def embeddingDupsFrame(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      dim: Int,
-      minCos: Double,
-      numPlanes: Int,
-      maxBucket: Int
-  ): (DataFrame, DataFrame) = {
-    // Norm is per-vector: compute once before the quadratic pair-up
-    // (recomputed per pair it would dominate the bucket join at scale).
-    val vecs = df.select(
-      col(idCol).as("id"),
-      col(vecCol).as("vec"),
-      Similarity.hyperplaneBucket(col(vecCol), numPlanes, dim).as("bucket"),
-      Similarity.norm(col(vecCol)).as("nrm")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    val banded = vecs.select(col("bucket"), col("id"))
-    val capped = banded
-      .withColumn(
-        "__rn",
-        row_number().over(Window.partitionBy(col("bucket")).orderBy(col("id")))
-      )
-      .filter(col("__rn") <= maxBucket)
-      .drop("__rn")
-
-    val a = capped.select(col("bucket"), col("id").as("id_a"))
-    val b = capped.select(col("bucket"), col("id").as("id_b"))
-    val pairs = a
-      .join(b, Seq("bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-
-    val out = pairs
-      .join(vecs.select(col("id").as("id_a"), col("vec").as("vec_a"), col("nrm").as("nrm_a")),
-        Seq("id_a"))
-      .join(vecs.select(col("id").as("id_b"), col("vec").as("vec_b"), col("nrm").as("nrm_b")),
-        Seq("id_b"))
-      .withColumn(
-        "cos",
-        when(
-          col("nrm_a") * col("nrm_b") > 0,
-          Similarity.dot(col("vec_a"), col("vec_b")) / (col("nrm_a") * col("nrm_b"))
-        ).otherwise(lit(0.0))
-      )
-      .filter(col("cos") >= minCos)
-      .select(col("id_a"), col("id_b"), col("cos"))
-    (vecs, out)
-  }
-
-  /**
-   * Quantized-integer variant of [[embeddingDups]] (same candidate
-   * discipline: capped buckets, id-only bucket shuffle, vector join-back
-   * onto surviving pairs) for corpora pre-quantized with
-   * [[Similarity.quantize]]. Cosine is exact integer dot / sqrt'd integer
-   * norms — bit-identical across engines, so this path is DuckDB-oracle-
-   * checkable where the float [[embeddingDups]] is not. The ad-hoc twin of
-   * [[embeddingDupsFromTable]]: same math, but buckets computed on the fly
-   * instead of read from a bucketed table.
    */
   def embeddingDupsQuantized(
       df: DataFrame,
@@ -1752,6 +1500,23 @@ object Dedup {
       minCos: Double,
       maxBucket: Int = 1000
   ): DataFrame = {
+    val (vecs, frame) = embeddingDupsQuantizedFrame(df, idCol, vecCol, planes, minCos, maxBucket)
+    // cut lineage back so the vector cache can be released immediately
+    val out = frame.localCheckpoint()
+    vecs.unpersist(blocking = false)
+    out
+  }
+
+  /** [[embeddingDupsQuantized]] before its lineage cut — (persisted vector
+    * table, lazy result frame), so `PlanSpec` can assert the exchange shapes. */
+  private[graft] def embeddingDupsQuantizedFrame(
+      df: DataFrame,
+      idCol: String,
+      vecCol: String,
+      planes: Seq[Array[Long]],
+      minCos: Double,
+      maxBucket: Int
+  ): (DataFrame, DataFrame) = {
     val vecs = df.select(
       col(idCol).as("id"),
       col(vecCol).as("v"),
@@ -1778,14 +1543,12 @@ object Dedup {
       .join(vecs.select(col("id").as("id_b"), col("v").as("vb"), col("n2").as("nb2")), Seq("id_b"))
       .withColumn(
         "cos",
-        when(nn > 0, Similarity.intDotFixed(col("va"), col("vb"), dim).cast("double") / nn)
+        when(nn > 0, Similarity.intDot(col("va"), col("vb")).cast("double") / nn)
           .otherwise(lit(0.0))
       )
       .filter(col("cos") >= minCos)
       .select(col("id_a"), col("id_b"), col("cos"))
-      .localCheckpoint()
-    vecs.unpersist(blocking = false)
-    out
+    (vecs, out)
   }
 
   /**
@@ -1897,7 +1660,7 @@ object Dedup {
       .join(vecs.select(col("id").as("id_b"), col("v").as("vb"), col("n2").as("nb2")), Seq("id_b"))
       .withColumn(
         "cos",
-        when(nn > 0, Similarity.intDotFixed(col("va"), col("vb"), dim).cast("double") / nn)
+        when(nn > 0, Similarity.intDot(col("va"), col("vb")).cast("double") / nn)
           .otherwise(lit(0.0))
       )
       .filter(col("cos") >= minCos)

@@ -15,8 +15,7 @@ import org.apache.spark.sql.functions._
  *
  * Distinct counts are EXACT, which is what makes the operator
  * oracle-checkable; the Expand pass multiplies scan rows by
- * (#profiled columns + 1), so at extreme widths or corpus sizes the
- * approx variant below trades exactness for a constant-memory sketch.
+ * (#profiled columns + 1).
  */
 object Profile {
 
@@ -81,37 +80,6 @@ object Profile {
         "p", org.apache.spark.sql.types.DoubleType, nullable = false),
       df.schema(valueCol).copy(name = "value")))
     spark.createDataFrame(hit, schema)
-  }
-
-  /** The sketch variant for schemas/scales where exact multi-distinct is
-    * too heavy: approx_count_distinct (HyperLogLog++, `rsd` relative
-    * error) replaces the Expand pass with constant-size per-column
-    * sketches — one scan, no row multiplication. Not oracle-comparable
-    * across engines (sketch internals differ); same output schema. */
-  def profileApprox(df: DataFrame, columns: Seq[String] = Nil,
-      rsd: Double = 0.05): DataFrame = {
-    val spark = df.sparkSession
-    val names = if (columns.nonEmpty) columns else df.columns.toSeq
-    require(names.nonEmpty, "nothing to profile")
-    val aggs: Seq[Column] = names.flatMap { c =>
-      Seq(
-        count(col(c)).as(s"__c_$c"),
-        approx_count_distinct(col(c), rsd).as(s"__d_$c"),
-        min(col(c)).cast("string").as(s"__mn_$c"),
-        max(col(c)).cast("string").as(s"__mx_$c"))
-    }
-    val all = count(lit(1)).as("__n") +: aggs
-    val row = df.agg(all.head, all.tail: _*).collect()(0)
-    val n = row.getLong(0)
-    val out = names.zipWithIndex.map { case (c, i) =>
-      val base = 1 + i * 4
-      (c, n, row.getLong(base), row.getLong(base + 1),
-        if (row.isNullAt(base + 2)) null else row.getString(base + 2),
-        if (row.isNullAt(base + 3)) null else row.getString(base + 3))
-    }
-    import spark.implicits._
-    out.toDF("col_name", "n_rows", "n_nonnull", "n_distinct",
-      "min_value", "max_value")
   }
 
   /**

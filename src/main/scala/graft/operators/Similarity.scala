@@ -292,105 +292,6 @@ object Similarity {
       .select(col(qidCol), col("rnk"), col("id").as("cid"), col("cos"))
   }
 
-  /** Deterministic random hyperplanes (seeded), as literal expression trees. */
-  private def planes(numPlanes: Int, dim: Int, seed: Long): Seq[Array[Double]] = {
-    val rnd = new Random(seed)
-    Seq.fill(numPlanes)(Array.fill(dim)(rnd.nextGaussian()))
-  }
-
-  /**
-   * Sign-LSH bucket id: bit p = sign(vec · plane_p). Uses a fixed seeded
-   * plane matrix baked into the plan as literals — no lookup table, no UDF.
-   *
-   * `dim` must match the actual embedding dimension: `zip_with` null-pads
-   * mismatched lengths, which would silently send every vector to bucket 0
-   * and degrade the bucketed join into a cross join — so a mismatch fails
-   * fast with `raise_error` instead.
-   */
-  def hyperplaneBucket(vec: Column, numPlanes: Int, dim: Int, seed: Long = 42L): Column = {
-    val ps = planes(numPlanes, dim, seed)
-    val bits = ps.zipWithIndex.map { case (p, i) =>
-      val d = aggregate(
-        zip_with(vec, array(p.toIndexedSeq.map(lit): _*), (x, w) => x.cast("double") * w),
-        lit(0.0),
-        _ + _
-      )
-      when(d > 0, shiftleft(lit(1), i)).otherwise(lit(0))
-    }
-    val bucket = bits.reduce((a, b) => a.bitwiseOR(b))
-    when(
-      size(vec) === dim,
-      bucket
-    ).otherwise(
-      raise_error(
-        concat(lit(s"hyperplaneBucket: expected embedding dim $dim, got "), size(vec))
-      ).cast("int")
-    )
-  }
-
-  /**
-   * LSH-bucketed approximate top-k: corpus bucketed once (materialize/bucket
-   * this by key in a real pipeline); each query probes its own bucket.
-   * Recall < 1.0 by construction; raise `numPlanes` ↓bucket size, or lower it
-   * ↑recall.
-   */
-  def lshTopK(
-      queries: DataFrame,
-      corpus: DataFrame,
-      qidCol: String,
-      qvecCol: String,
-      cidCol: String,
-      cvecCol: String,
-      k: Int,
-      dim: Int,
-      numPlanes: Int = 8,
-      probeFlips: Int = 0,
-      broadcastMaxBytes: Long = 256L << 20
-  ): DataFrame = {
-    // Multi-probe LSH (Lv et al. 2007): with probeFlips = 1 each query also
-    // probes every Hamming-1 neighbor of its own bucket — numPlanes+1
-    // buckets per query instead of one, recovering the recall a single
-    // sign-LSH table loses as planes grow (measured at sf0.1: planes=6
-    // single-probe recall@10 0.05 → multi-probe 0.26). The CORPUS side is
-    // untouched: still one bucket per vector, still an equi-join — the
-    // probe fan-out rides the small broadcast query side.
-    require(probeFlips >= 0 && probeFlips <= 1,
-      "probeFlips supports 0 (single-probe) or 1 (Hamming-1 multi-probe)")
-    val baseB = hyperplaneBucket(col(qvecCol), numPlanes, dim)
-    val qbuckets =
-      if (probeFlips == 0) array(baseB)
-      else array((baseB +: (0 until numPlanes).map(i => baseB.bitwiseXOR(lit(1 << i)))): _*)
-    // Fan-out passed explicitly: size-only plan stats do not multiply a
-    // Generate's row count, so the exploded frame's estimate would miss the
-    // (numPlanes+1)× multi-probe blow-up the broadcast actually pays.
-    val qb = gateQuerySide(
-      queries
-        .withColumn("bucket", explode(qbuckets))
-        .withColumn("__qn", norm(col(qvecCol))),
-      fanOut = if (probeFlips == 0) 1 else numPlanes + 1,
-      broadcastMaxBytes,
-      "shuffle_hash"
-    )
-    val cb = corpus
-      .withColumn("bucket", hyperplaneBucket(col(cvecCol), numPlanes, dim))
-      .withColumn("__cn", norm(col(cvecCol)))
-    val scored = cb
-      .join(qb, Seq("bucket"))
-      .filter(col(qidCol) =!= col(cidCol))
-      .withColumn(
-        "cos",
-        when(
-          col("__qn") * col("__cn") > 0,
-          dot(col(qvecCol), col(cvecCol)) / (col("__qn") * col("__cn"))
-        ).otherwise(lit(0.0))
-      )
-    val w = Window.partitionBy(col(qidCol)).orderBy(col("cos").desc, col(cidCol))
-    scored
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col(qidCol), col("rnk"), col(cidCol), col("cos"))
-  }
-
   // -------------------------------------------------------------- portable
   // Quantized variants: embeddings rounded to integers make every dot
   // product exact integer arithmetic (sums stay far below 2^53), so the
@@ -419,10 +320,6 @@ object Similarity {
     * operators built on this stay DuckDB-oracle-checkable. */
   def intDot(a: Column, b: Column): Column =
     graft.functions.HashExpressions.longDot(a, b)
-
-  /** Historical alias of [[intDot]] from when the dimension had to be known
-    * statically for an `element_at`-sum formulation; `dim` is now ignored. */
-  def intDotFixed(a: Column, b: Column, dim: Int): Column = intDot(a, b)
 
   /** Cosine over quantized vectors: exact integer dot/norms, then one double
     * division — bit-identical across engines. NOTE: evaluates both norms per
@@ -686,7 +583,7 @@ object Similarity {
       .filter(col(qidCol) =!= col(cidCol))
       .withColumn(
         "cos",
-        when(nn > 0, intDotFixed(col(qvecCol), col(cvecCol), dim).cast("double") / nn)
+        when(nn > 0, intDot(col(qvecCol), col(cvecCol)).cast("double") / nn)
           .otherwise(lit(0.0))
       )
       .withColumn("rnk", row_number().over(w).cast("bigint"))
@@ -1134,8 +1031,10 @@ object Similarity {
       .select(col(qidCol), col("rnk"), col("id").as("cid"), col("cos"))
   }
 
-  /** Sign-LSH bucket from explicit integer planes over a quantized vector.
-    * Same fail-fast dim contract as [[hyperplaneBucket]]. */
+  /** Sign-LSH bucket from explicit integer planes over a quantized vector:
+    * bit p = sign(vec · plane_p). The vector length must equal the planes'
+    * dimension: a mismatched vector would silently land in a wrong bucket
+    * and degrade the bucketed join, so it fails fast with `raise_error`. */
   def intPlaneBucket(vec: Column, planes: Seq[Array[Long]]): Column = {
     val dim = planes.head.length
     val bits = planes.zipWithIndex.map { case (p, i) =>

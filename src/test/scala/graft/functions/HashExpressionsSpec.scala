@@ -2,9 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.functions._
 
-import graft.GraftExtensions
 import graft.SparkSpec
-import graft.operators.Dedup
 
 class HashExpressionsSpec extends SparkSpec {
   import spark.implicits._
@@ -18,7 +16,7 @@ class HashExpressionsSpec extends SparkSpec {
     val sigs = docs
       .select(
         col("id"),
-        HashExpressions.minhashSignatureFast(Text.wordShingles(col("text"), 3), 32).as("sig")
+        HashExpressions.portableMinhashSignature(Text.wordShingles(col("text"), 3), 32).as("sig")
       )
       .collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1))
@@ -31,20 +29,29 @@ class HashExpressionsSpec extends SparkSpec {
   }
 
   test("interpreted eval and codegen produce identical results") {
-    val df = Seq((1L, Seq("a", "b", "c")), (2L, Seq.empty[String])).toDF("id", "arr")
+    val df = Seq(
+      (1L, Seq("a", "b", "c")),
+      (2L, Seq.empty[String]),
+      (3L, Seq("a", null, "b", "c"))
+    ).toDF("id", "arr")
     def run(mode: String) = {
       spark.conf.set("spark.sql.codegen.factoryMode", mode)
       try df.select(
         col("id"),
-        HashExpressions.minhashSignatureFast(col("arr"), 8).as("mh"),
-        HashExpressions.simhash64Fast(col("arr")).as("sh")
-      ).collect().map(r => (r.getLong(0), r.getSeq[Long](1), r.getLong(2))).toSeq
+        HashExpressions.portableMinhashSignature(col("arr"), 8).as("mh"),
+        HashExpressions.portableSimhashBits(col("arr")).as("sh")
+      ).collect().map(r => r.getLong(0) -> (r.getSeq[Long](1), r.getString(2))).toMap
       finally spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
     }
-    assert(run("NO_CODEGEN") === run("CODEGEN_ONLY"))
-    // empty array: deterministic sentinel minima, zero-vote simhash
-    val empty = run("CODEGEN_ONLY").find(_._1 == 2L).get
-    assert(empty._2.forall(_ == Long.MaxValue) && empty._3 === 0L)
+    val got = run("CODEGEN_ONLY")
+    assert(run("NO_CODEGEN") === got)
+    // empty array: all-P31 sentinel minima, zero-vote simhash
+    val (emptyMh, emptySh) = got(2L)
+    assert(emptyMh.size === 8 && emptyMh.forall(_ == Hashing.P31))
+    assert(emptySh === "0" * 64)
+    // a null element is skipped, not hashed
+    assert(got(3L) === got(1L))
+    assert(got(1L)._1.forall(_ < Hashing.P31) && got(1L)._2.length === 64)
   }
 
   test("longDot: value-identical to the HOF formulation, null/empty/length-mismatch safe") {
@@ -70,53 +77,6 @@ class HashExpressionsSpec extends SparkSpec {
       aggregate(zip_with(col("a"), col("b"), (x, y) => x * y), lit(0L), _ + _).as("d"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(hof === Map(1L -> got(1L)))
-  }
-
-  test("fast LSH paths recover the planted near-dup like the portable paths") {
-    val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 3
-    val docs = Seq(
-      (1L, base),
-      (2L, base + "lambda"), // near-dup of 1
-      (3L, "unrelated words entirely disjoint from everything else here now")
-    ).toDF("id", "text")
-    val mh = Dedup.minHashLshFast(docs, "id", "text", minSim = 0.5)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(mh.contains((1L, 2L)) && !mh.exists(p => p._1 == 3L || p._2 == 3L))
-
-    // SimHash: derive the ground-truth hamming distances from the expression
-    // itself, then assert the pigeonhole operator returns EXACTLY the pairs
-    // within the threshold (hash-statistics-proof, unlike a fixed cutoff).
-    val shVals = docs
-      .select(col("id"), HashExpressions.simhash64Fast(Text.tokens(col("text"))).as("sh"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    def dist(a: Long, b: Long) = java.lang.Long.bitCount(shVals(a) ^ shVals(b))
-    val d12 = dist(1L, 2L)
-    assert(d12 < dist(1L, 3L) && d12 < dist(2L, 3L)) // near-dup is nearest
-    val ids = shVals.keys.toSeq.sorted
-    val expected = (for {
-      a <- ids; b <- ids if a < b && dist(a, b) <= d12
-    } yield (a, b)).toSet
-    val sh = Dedup.simHashDupsFast(docs, "id", "text", maxHamming = d12)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(sh === expected && sh.contains((1L, 2L)))
-  }
-
-  test("SQL surface via GraftExtensions function builders") {
-    GraftExtensions.functions.foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
-    val row = spark
-      .sql("SELECT minhash_signature(array('a','b'), 8) AS mh, simhash64(array('a','b')) AS sh")
-      .head()
-    assert(row.getSeq[Long](0).size === 8)
-    // matches the Column API exactly
-    val viaApi = spark.range(1)
-      .select(
-        HashExpressions.minhashSignatureFast(array(lit("a"), lit("b")), 8).as("mh"),
-        HashExpressions.simhash64Fast(array(lit("a"), lit("b"))).as("sh")
-      ).head()
-    assert(row.getSeq[Long](0) === viaApi.getSeq[Long](0))
-    assert(row.getLong(1) === viaApi.getLong(1))
   }
 
   test("longSetContains: binary-searched membership, codegen ≡ interpreted") {

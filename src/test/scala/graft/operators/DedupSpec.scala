@@ -107,14 +107,15 @@ class DedupSpec extends SparkSpec {
     }
   }
 
-  test("embeddingDups: bucketed cosine near-dups") {
+  test("embeddingDupsQuantized: bucketed cosine near-dups") {
     val vecs = Seq(
       (0L, Array(1.0f, 0.0f, 0.0f)),
       (1L, Array(0.999f, 0.01f, 0.0f)), // near dup of 0
       (2L, Array(0.0f, 1.0f, 0.0f))
-    ).toDF("id", "vec")
+    ).toDF("id", "vec").select(col("id"), Similarity.quantize(col("vec")).as("vec"))
+    val planes = Similarity.intPlanes(numPlanes = 2, dim = 3)
     val got = Dedup
-      .embeddingDups(vecs, "id", "vec", dim = 3, minCos = 0.99, numPlanes = 2)
+      .embeddingDupsQuantized(vecs, "id", "vec", planes, dim = 3, minCos = 0.99)
       .select("id_a", "id_b")
       .as[(Long, Long)]
       .collect()
@@ -122,14 +123,15 @@ class DedupSpec extends SparkSpec {
     assert(got === Set((0L, 1L)))
   }
 
-  test("embeddingDups: maxBucket caps a degenerate bucket's quadratic pair-up") {
+  test("embeddingDupsQuantized: maxBucket caps a degenerate bucket's quadratic pair-up") {
     // 6 identical vectors land in one bucket; uncapped that is C(6,2)=15
     // pairs, capped at 3 members it is C(3,2)=3 — and the kept members are
     // the lowest ids (row_number ordered by id), chaining the cluster.
-    val vecs = (0L until 6L).map(i => (i, Array(1.0f, 0.0f, 0.0f))).toDF("id", "vec")
-    val uncapped = Dedup.embeddingDups(vecs, "id", "vec", dim = 3, minCos = 0.99, numPlanes = 2)
+    val vecs = (0L until 6L).map(i => (i, Array(1000L, 0L, 0L))).toDF("id", "vec")
+    val planes = Similarity.intPlanes(numPlanes = 2, dim = 3)
+    val uncapped = Dedup.embeddingDupsQuantized(vecs, "id", "vec", planes, dim = 3, minCos = 0.99)
     assert(uncapped.count() === 15)
-    val capped = Dedup.embeddingDups(vecs, "id", "vec", dim = 3, minCos = 0.99, numPlanes = 2,
+    val capped = Dedup.embeddingDupsQuantized(vecs, "id", "vec", planes, dim = 3, minCos = 0.99,
       maxBucket = 3)
     val got = capped.select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(got === Set((0L, 1L), (0L, 2L), (1L, 2L)))
@@ -206,25 +208,36 @@ class DedupSpec extends SparkSpec {
     assert(capped.select("dist").as[Long].head() === 0L)
   }
 
-  test("large-star/small-star CC: long chains converge in O(log n), agrees with label propagation") {
-    // a 200-node chain: diameter 199 — label propagation would need ~200
-    // rounds, the star algorithm a handful
+  test("connected components: pointer jumping collapses long chains, equals union-find") {
+    // a 200-node chain: diameter 199 — plain label propagation would need
+    // ~200 rounds; with the per-round pointer jump the label reach grows
+    // d -> 2d+2, so about 8 rounds fit well inside the default maxIter = 30
     val chain = (0L until 199L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val comps = Dedup.connectedComponentsLargeStar(chain).collect()
+    val comps = Dedup.connectedComponents(chain).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comps.size === 200)
     assert(comps.values.toSet === Set(0L))
+    // reach 2, 6, 14, ..., 254 >= 199 after 7 rounds; the 8th sees no change
+    assert(Dedup.connectedComponents(chain, maxIter = 8).count() === 200)
 
-    // random-ish graph: both algorithms produce identical components
+    // seeded random graph: components equal a union-find over the same edges
     val rnd = new scala.util.Random(7)
-    val pairs = Seq.fill(120)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
+    val edges = Seq.fill(120)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
       .filter { case (a, b) => a != b }
-      .toDF("id_a", "id_b")
-    val byStar = Dedup.connectedComponentsLargeStar(pairs).collect()
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val expected = edges.flatMap { case (a, b) => Seq(a, b) }.distinct
+      .map(id => id -> find(id)).toMap
+    val got = Dedup.connectedComponents(edges.toDF("id_a", "id_b")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val byProp = Dedup.connectedComponents(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(byStar === byProp)
+    assert(got === expected)
   }
 
   test("minhash index probe ≡ batch minHashLsh restricted to cross-split pairs") {
@@ -247,23 +260,6 @@ class DedupSpec extends SparkSpec {
     }.toSet
     assert(inc === expected)
     assert(inc.nonEmpty, "fixture should contain cross-split near-dups")
-    // fast family: same machinery, codegen'd xxhash64 signatures — compare
-    // against the fast BATCH operator (the two families estimate jaccard
-    // from different hash minima, so near-threshold pairs legitimately
-    // differ across families, never within one)
-    Dedup.materializeMinhashIndex(corpus, "doc_id", "text",
-      table = "graft_test_mh_idx_fast", numBuckets = 4, fast = true)
-    val incFast = Dedup.minHashLshAgainstIndex(batch, "doc_id", "text",
-      table = "graft_test_mh_idx_fast", minSim = 0.5, fast = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val expectedFast = Dedup.minHashLshFast(real, "doc_id", "text", minSim = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-      .flatMap { case (a, b) =>
-        if (a % 5 == 0 && b % 5 != 0) Some((a, b))
-        else if (b % 5 == 0 && a % 5 != 0) Some((b, a))
-        else None
-      }.toSet
-    assert(incFast === expectedFast)
     // the index is physically bucketed on its join keys, so probe joins
     // read the corpus through its layout instead of re-shuffling it
     val desc = spark.sql("DESCRIBE EXTENDED graft_test_mh_idx_buckets")

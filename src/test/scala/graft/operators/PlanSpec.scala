@@ -430,18 +430,19 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("embeddingDups ad-hoc path: candidate-generation exchanges carry ids, never vectors") {
+  test("embeddingDupsQuantized ad-hoc path: candidate-generation exchanges carry ids, never vectors") {
     val corpus = spark.range(300).select(
       col("id"),
-      array((col("id") % 7).cast("float"), (col("id") % 5).cast("float"),
-        (col("id") % 3).cast("float"), lit(1.0f)).as("emb"))
+      array((col("id") % 7) * 1000, (col("id") % 5) * 1000, (col("id") % 3) * 1000, lit(1000L))
+        .as("emb"))
+    val planes = Similarity.intPlanes(numPlanes = 6, dim = 4)
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force real exchanges
     spark.conf.set("spark.sql.adaptive.enabled", "false") // static plan for collect()
     try {
-      val (vecs, frame) = Dedup.embeddingDupsFrame(
-        corpus, "id", "emb", dim = 4, minCos = 0.99, numPlanes = 6, maxBucket = 1000)
+      val (vecs, frame) = Dedup.embeddingDupsQuantizedFrame(
+        corpus, "id", "emb", planes, minCos = 0.99, maxBucket = 1000)
       try {
         val exchanges = frame.queryExecution.executedPlan.collect {
           case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
@@ -449,11 +450,12 @@ class PlanSpec extends SparkSpec {
         }
         assert(exchanges.nonEmpty, "fixture too small to exercise shuffles")
         // The bucket-keyed (candidate-generation) exchanges must ship only
-        // (bucket, id): the wide embedding column rides no bucket exchange.
+        // (bucket, id): the wide vector column rides no bucket exchange.
+        val vectorCols = Set("emb", "v", "va", "vb")
         val bucketExchanges = exchanges.filter(_.exists(_.startsWith("bucket")))
         assert(bucketExchanges.nonEmpty, exchanges.toString)
         bucketExchanges.foreach { cols =>
-          assert(!cols.exists(c => c.startsWith("vec") || c.startsWith("emb")),
+          assert(!cols.exists(vectorCols),
             s"vector column on a candidate-generation exchange: $cols")
         }
         assert(frame.count() > 0)
@@ -616,7 +618,7 @@ class PlanSpec extends SparkSpec {
           .as("text"))
       val (probe, sigs) = Dedup.probeIndexPlan(batch, "doc_id", "text",
         table = "plan_tick_idx", shingleLen = 3, numHashes = 64, bands = 16,
-        minSim = 0.5, fast = false)
+        minSim = 0.5)
       assert(!corpusShuffled(probe, "plan_tick_idx_buckets", "plan_tick_idx_sigs"),
         probe.queryExecution.executedPlan.toString)
       assert(formatted(probe).contains("Bucketed: true"), formatted(probe))

@@ -35,41 +35,6 @@ class SimilaritySpec extends SparkSpec {
     assert(z.select(Similarity.cosine(col("a"), col("b")).as("c")).head().getDouble(0) === 0.0)
   }
 
-  test("lshTopK recalls the nearest neighbor for aligned vectors") {
-    val got = Similarity
-      .lshTopK(queries, corpus, "qid", "qvec", "cid", "cvec", k = 1, dim = 3, numPlanes = 2)
-      .select("qid", "cid")
-      .as[(Long, Long)]
-      .collect()
-      .toMap
-    // LSH is approximate: assert only that whatever is returned per query has
-    // cosine >= the bucketed competitors, i.e. the top hit when present is 10/12.
-    got.get(1L).foreach(c => assert(c === 10L))
-    got.get(2L).foreach(c => assert(c === 12L))
-  }
-
-  test("lshTopK multi-probe: candidates are a superset of single-probe, never fewer hits") {
-    def hits(flips: Int) = Similarity
-      .lshTopK(queries, corpus, "qid", "qvec", "cid", "cvec", k = 3, dim = 3,
-        numPlanes = 2, probeFlips = flips)
-      .select("qid", "cid").as[(Long, Long)].collect().toSet
-    val single = hits(0)
-    val multi = hits(1)
-    assert(single.subsetOf(multi),
-      s"multi-probe must contain every single-probe hit: $single vs $multi")
-    intercept[IllegalArgumentException](
-      Similarity.lshTopK(queries, corpus, "qid", "qvec", "cid", "cvec", k = 1, dim = 3,
-        numPlanes = 2, probeFlips = 2))
-  }
-
-  test("hyperplaneBucket raises on dimension mismatch instead of silently bucketing") {
-    val bad = Seq((1L, Array(1.0f, 2.0f))).toDF("id", "vec")
-    val ex = intercept[Exception] {
-      bad.select(Similarity.hyperplaneBucket(col("vec"), 4, dim = 64)).collect()
-    }
-    assert(ex.getMessage.contains("expected embedding dim 64"))
-  }
-
   test("quantized path: quantize rounds half away from zero; intDot/intCosine exact") {
     val df = Seq((1L, Array(0.0015f, -0.0015f, 1.0f))).toDF("id", "vec")
     val q = df.select(Similarity.quantize(col("vec"), 1000).as("v"))
@@ -470,9 +435,6 @@ class SimilaritySpec extends SparkSpec {
     // tiny probe sets broadcast (the default plan)…
     assert(hasBroadcast(
       Similarity.bruteForceTopK(queries, corpus, "qid", "qvec", "cid", "cvec", k = 2)))
-    assert(hasBroadcast(
-      Similarity.lshTopK(queries, corpus, "qid", "qvec", "cid", "cvec",
-        k = 2, dim = 3, numPlanes = 2, probeFlips = 1)))
 
     // …but a query side over the gate must NOT reach the driver: every ANN
     // entry point downgrades instead of OOMing. Gate forced tiny so the
@@ -482,13 +444,17 @@ class SimilaritySpec extends SparkSpec {
       Similarity.bruteForceTopK(queries, corpus, "qid", "qvec", "cid", "cvec",
         k = 2, broadcastMaxBytes = tiny)))
     assert(!hasBroadcast(
-      Similarity.lshTopK(queries, corpus, "qid", "qvec", "cid", "cvec",
-        k = 2, dim = 3, numPlanes = 2, probeFlips = 1, broadcastMaxBytes = tiny)))
-    assert(!hasBroadcast(
       Similarity.sq8TopK(queries, corpus, "qid", "qvec", "cid", "cvec", k = 2,
         mins = Seq(0, 0, 0), maxs = Seq(1, 1, 1), broadcastMaxBytes = tiny)))
     val qq = queries.select(col("qid"), Similarity.quantize(col("qvec")).as("qvec"))
     val qc = corpus.select(col("cid"), Similarity.quantize(col("cvec")).as("cvec"))
+    val tables = Seq(7L, 8L).map(seed => Similarity.intPlanes(numPlanes = 2, dim = 3, seed = seed))
+    assert(hasBroadcast(
+      Similarity.lshTopKMultiTable(qq, qc, "qid", "qvec", "cid", "cvec", k = 2,
+        planeTables = tables)))
+    assert(!hasBroadcast(
+      Similarity.lshTopKMultiTable(qq, qc, "qid", "qvec", "cid", "cvec", k = 2,
+        planeTables = tables, broadcastMaxBytes = tiny)))
     val cents = Similarity.ivfTrain(qc, "cid", "cvec", k = 2, iters = 0)
     assert(!hasBroadcast(
       Similarity.ivfTopK(qq, qc, "qid", "qvec", "cid", "cvec", k = 2, dim = 3,
