@@ -1,24 +1,23 @@
 package graft.ingest
 
-import java.nio.file.{Files, Path}
 import java.sql.Timestamp
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.chain.MetadataChain
 import graft.dataset.Dataset
-import graft.model.{MergeConf, MetadataEvent}
+import graft.model.{DatasetVocabulary, MergeConf, Op}
 import graft.model.MetadataEvent.{AddData, SetDataSchema}
-import graft.operators.{MergeStrategy, Writer}
+import graft.operators.{MergeStrategy, RecordDigest, Writer}
 
 /**
  * The ingest commit path: merge → stamp → offsets → normalize → single-file
  * parquet slice → stats → hashes → AddData block. Mirrors
  * `DataWriterDataFusion::{stage,write}`
- * (src/infra/ingest-datafusion/src/writer.rs:937-1135, 552-712).
+ * (src/infra/ingest-datafusion/src/writer.rs:937-1135, 552-712). Everything
+ * after the merge is [[commitSlice]], which batch and streaming transforms
+ * commit through as well.
  *
  * Scale notes: the merge and offset assignment are fully distributed (see
  * Writer.assignOffsets); only the final single-file slice write funnels
@@ -78,64 +77,9 @@ object IngestWriter {
         val prev = if (prevOffset.isDefined) Some(ds.toDF()) else None
         merge.merge(prev, batch)
     }
-    val stamped = Writer.stampSystemColumns(
-      merged,
-      new Timestamp(systemTime),
-      eventTimeFallback.map(new Timestamp(_)),
-      vocab
-    )
-    val withOffsets = Writer.assignOffsets(
-      Writer.normalizeTimestamps(stamped),
-      merge.sortOrder(stamped),
-      startOffset = prevOffset.map(_ + 1).getOrElse(0L),
-      vocab
-    )
-
-    val slicePath = writeSliceFile(chain, withOffsets)
-    slicePath match {
-      case None => None // empty merge -> nothing to commit
-      case Some((file, physicalHash)) =>
-        // Stats + logical hash in one pass over a re-read of the written
-        // file, so they are guaranteed to describe the slice as persisted
-        // (writer.rs:613-712).
-        val written = ds.spark.read.parquet(file.toString)
-        val (stats, logical) = Writer.computeStatsAndHash(
-          written,
-          chain.watermark().map(new Timestamp(_)),
-          vocab
-        ).get
-
-        // First write declares the schema; a later batch whose written schema
-        // differs (e.g. a new column) appends a fresh SetDataSchema — the
-        // reference's schema-migration-across-slices behavior
-        // (test_query_service_impl.rs:991). Schema-first reads then use the
-        // DDL as of the pinned block: old slices read under a newer DDL get
-        // nulls for the added columns, as-of reads see the old shape.
-        // Only COMPATIBLE evolution commits: additive columns or integral/
-        // float/decimal widening. A batch that drops or retypes a column is
-        // rejected here, before anything lands in the chain — otherwise head
-        // reads would fail on old slices (parquet type conflict) or silently
-        // hide the dropped column.
-        val writtenDdl = written.schema.toDDL
-        if (!chain.schemaDdl().contains(writtenDdl)) {
-          chain.schemaDdl().foreach(prev => validateSchemaEvolution(prev, written.schema))
-          chain.append(SetDataSchema(writtenDdl), systemTime)
-        }
-
-        val event = AddData(
-          prevOffset = prevOffset,
-          offsetStart = stats.offsetStart,
-          offsetEnd = stats.offsetEnd,
-          numRecords = stats.numRecords,
-          physicalHash = physicalHash,
-          logicalHash = logical,
-          newWatermark = stats.newWatermark.map(_.getTime),
-          sourceState = sourceState,
-          logicalHashSha3 =
-            if (graft.operators.RecordDigest.enabled(ds.spark))
-              Some(graft.operators.RecordDigest.digest(written.orderBy(vocab.offsetColumn)))
-            else None
-        )
+    commitSlice(ds, vocab, prevOffset, merged, merge.sortOrder, systemTime, eventTimeFallback)
+      .map { case (added, written) =>
+        val event = added.copy(sourceState = sourceState)
         chain.append(event, systemTime)
         // Roll the state cache forward incrementally: project(old state ∪ new
         // slice) — O(state), never O(history). Best-effort: a failure here
@@ -144,7 +88,94 @@ object IngestWriter {
           try updateStateCache(ds, pk, priorState, written)
           catch { case scala.util.control.NonFatal(_) => () }
         }
-        Some(event)
+        event
+      }
+  }
+
+  /** The rows of a slice as committed: `op = +A` added when the rows carry
+    * no op column, system columns stamped, timestamps normalized, dense
+    * offsets from `startOffset` in `sortOrder` (computed over the stamped
+    * rows). Transform replay re-derives a committed slice through here. */
+  private[graft] def sliceRows(
+      rows: DataFrame,
+      sortOrder: DataFrame => Seq[Column],
+      systemTime: Long,
+      eventTimeFallback: Option[Long],
+      startOffset: Long,
+      vocab: DatasetVocabulary
+  ): DataFrame = {
+    val withOp =
+      if (rows.columns.contains(vocab.operationTypeColumn)) rows
+      else rows.withColumn(vocab.operationTypeColumn, lit(Op.Append))
+    val stamped = Writer.stampSystemColumns(
+      withOp, new Timestamp(systemTime), eventTimeFallback.map(new Timestamp(_)), vocab)
+    Writer.assignOffsets(Writer.normalizeTimestamps(stamped), sortOrder(stamped), startOffset, vocab)
+  }
+
+  /**
+   * The one slice-commit path of ingest, batch transforms and streaming
+   * transforms: [[sliceRows]] after the chain's `prevOffset` → single-file
+   * slice → re-read → stats and logical hash, a validated SetDataSchema
+   * appended when the written schema changed, and the SHA3 record digest
+   * when [[RecordDigest]] is on. Returns the AddData, NOT yet appended, with
+   * the frame re-read from the written file; None when the rows are empty.
+   * Callers keep their own policy: ingest adds the source state, the batch
+   * transform its watermark, transforms the ExecuteTransform wrapper.
+   * `vocab` and `prevOffset` come from the caller, which reads them anyway:
+   * every chain accessor walks the whole chain.
+   */
+  private[graft] def commitSlice(
+      ds: Dataset,
+      vocab: DatasetVocabulary,
+      prevOffset: Option[Long],
+      rows: DataFrame,
+      sortOrder: DataFrame => Seq[Column],
+      systemTime: Long,
+      eventTimeFallback: Option[Long] = None
+  ): Option[(AddData, DataFrame)] = {
+    val chain = ds.chain
+    val sliced = sliceRows(
+      rows, sortOrder, systemTime, eventTimeFallback, prevOffset.map(_ + 1).getOrElse(0L), vocab)
+    writeSliceFile(chain, sliced).map { case (file, physicalHash) =>
+      // Stats + logical hash in one pass over a re-read of the written
+      // file, so they are guaranteed to describe the slice as persisted
+      // (writer.rs:613-712).
+      val written = ds.spark.read.parquet(file.toString)
+      val (stats, logical) =
+        Writer.computeStatsAndHash(written, chain.watermark().map(new Timestamp(_)), vocab).get
+
+      // First write declares the schema; a later slice whose written schema
+      // differs (e.g. a new column) appends a fresh SetDataSchema — the
+      // reference's schema-migration-across-slices behavior
+      // (test_query_service_impl.rs:991). Schema-first reads then use the
+      // DDL as of the pinned block: old slices read under a newer DDL get
+      // nulls for the added columns, as-of reads see the old shape.
+      // Only COMPATIBLE evolution commits: additive columns or integral/
+      // float/decimal widening. A slice that drops or retypes a column is
+      // rejected here, before anything lands in the chain — otherwise head
+      // reads would fail on old slices (parquet type conflict) or silently
+      // hide the dropped column.
+      val writtenDdl = written.schema.toDDL
+      val prevDdl = chain.schemaDdl()
+      if (!prevDdl.contains(writtenDdl)) {
+        prevDdl.foreach(validateSchemaEvolution(_, written.schema))
+        chain.append(SetDataSchema(writtenDdl), systemTime)
+      }
+
+      val added = AddData(
+        prevOffset = prevOffset,
+        offsetStart = stats.offsetStart,
+        offsetEnd = stats.offsetEnd,
+        numRecords = stats.numRecords,
+        physicalHash = physicalHash,
+        logicalHash = logical,
+        newWatermark = stats.newWatermark.map(_.getTime),
+        logicalHashSha3 =
+          if (RecordDigest.enabled(ds.spark))
+            Some(RecordDigest.digest(written.orderBy(vocab.offsetColumn)))
+          else None
+      )
+      (added, written)
     }
   }
 
@@ -227,17 +258,9 @@ object IngestWriter {
         case other => throw new IllegalArgumentException(s"unknown prep step: $other")
       }
     }
-    val reader = Readers.forFormat(src.readFormat, src.schemaDdl, src.readOptions)
-    val raw = reader(ds.spark, prepped.toString)
-    val prepared = src.preprocessSql match {
-      case None => raw
-      case Some(sql) =>
-        raw.createOrReplaceTempView("input")
-        ds.spark.sql(sql)
-    }
     writeBatch(
       ds,
-      prepared,
+      readPrepared(ds, src.readFormat, src.schemaDdl, src.readOptions, src.preprocessSql, prepped.toString),
       strategyFor(src.merge, ds.vocabulary),
       systemTime,
       eventTimeFallback = eventTimeFallback,
@@ -258,14 +281,26 @@ object IngestWriter {
       .pushSource(sourceName)
       .getOrElse(throw new IllegalStateException(
         s"dataset ${ds.name} has no enabled push source '$sourceName'"))
-    val raw = Readers.forFormat(src.readFormat, src.schemaDdl, src.readOptions)(ds.spark, path)
-    val prepared = src.preprocessSql match {
-      case None => raw
-      case Some(sql) =>
-        raw.createOrReplaceTempView("input")
-        ds.spark.sql(sql)
-    }
+    val prepared =
+      readPrepared(ds, src.readFormat, src.schemaDdl, src.readOptions, src.preprocessSql, path)
     writeBatch(ds, prepared, strategyFor(src.merge, ds.vocabulary), systemTime)
+  }
+
+  /** Read a source file, then run the optional preprocess SQL over it as the
+    * temp view `input` — the read half shared by polling and push ingest. */
+  private def readPrepared(
+      ds: Dataset,
+      readFormat: String,
+      schemaDdl: Option[String],
+      readOptions: Map[String, String],
+      preprocessSql: Option[String],
+      path: String
+  ): DataFrame = {
+    val raw = Readers.forFormat(readFormat, schemaDdl, readOptions)(ds.spark, path)
+    preprocessSql.fold(raw) { sql =>
+      raw.createOrReplaceTempView("input")
+      ds.spark.sql(sql)
+    }
   }
 
   /**
@@ -430,6 +465,6 @@ object IngestWriter {
       .select(xxhash64(df.columns.map(col).toSeq: _*).as("h"))
       .agg(expr("bit_xor(h)").as("x"), count(lit(1)).as("n"))
       .head()
-    f"${h.getAs[Long]("x")}%016x-${h.getAs[Long]("n")}%d"
+    Writer.logicalHashHex(h.getAs[Long]("x"), h.getAs[Long]("n"))
   }
 }

@@ -1,18 +1,14 @@
 package graft.maintenance
 
-import java.nio.file.{Files, Path}
-import java.sql.Timestamp
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.functions._
 
 import graft.chain.MetadataChain
 import graft.dataset.Dataset
 import graft.ingest.IngestWriter
-import graft.model.{MetadataBlock, MetadataEvent}
+import graft.model.MetadataBlock
 import graft.model.MetadataEvent._
-import graft.operators.Writer
+import graft.operators.{MergeStrategy, Writer}
+import graft.transform.TransformService
 
 /**
  * Maintenance operators: compaction, verification, transform replay.
@@ -135,7 +131,7 @@ object Maintenance {
         .find(_.getName.startsWith("part-"))
         .get
       val st = sliceStats(i)
-      val logical = f"${st.getAs[Long]("x")}%016x-${st.getAs[Long]("n")}%d"
+      val logical = Writer.logicalHashHex(st.getAs[Long]("x"), st.getAs[Long]("n"))
       val hash = chain.sha256HexOf(file)
       val target = chain.dataFile(hash)
       if (!fs.exists(target)) fs.rename(file, target)
@@ -396,26 +392,15 @@ object Maintenance {
     chain.blocks().foreach {
       case MetadataBlock(_, _, systemTime, ExecuteTransform(inputs, Some(newData), _)) =>
         inputs.foreach { st =>
-          val in = resolve(st.datasetName)
-          val lo = st.prevOffset.map(_ + 1).getOrElse(0L)
-          val hi = st.newOffset.getOrElse(-1L)
-          in.toDF()
-            .filter(col(in.vocabulary.offsetColumn) >= lo && col(in.vocabulary.offsetColumn) <= hi)
+          resolve(st.datasetName)
+            .changesSince(st.prevOffset, upTo = st.newOffset.orElse(Some(-1L)))
             .createOrReplaceTempView(st.datasetName)
         }
-        val result = {
-          decl.steps.init.foreach { s =>
-            spark.sql(s.query).createOrReplaceTempView(s.alias.get)
-          }
-          spark.sql(decl.steps.last.query)
-        }
-        val withOp =
-          if (result.columns.contains(vocab.operationTypeColumn)) result
-          else result.withColumn(vocab.operationTypeColumn, lit(graft.model.Op.Append))
-        val stamped = Writer.stampSystemColumns(withOp, new Timestamp(systemTime), None, vocab)
-        val replayed = Writer.assignOffsets(
-          Writer.normalizeTimestamps(stamped),
-          graft.operators.MergeStrategy.totalOrder(stamped, vocab),
+        val replayed = IngestWriter.sliceRows(
+          TransformService.runSteps(spark, decl.steps),
+          MergeStrategy.totalOrder(_, vocab),
+          systemTime,
+          eventTimeFallback = None,
           startOffset = newData.offsetStart,
           vocab
         )

@@ -60,9 +60,11 @@ import org.apache.spark.sql.types._
  */
 object RecordDigest {
 
-  /** Spark-conf switch: when "true", IngestWriter stamps AddData with this
-    * digest alongside the xxhash64-XOR fast hash. Off by default — it costs
-    * an extra distributed pass (count + chunk-aligned shuffle) per commit. */
+  /** Spark-conf switch: when "true", every slice commit (ingest, batch and
+    * streaming transforms, all through `IngestWriter.commitSlice`) stamps
+    * its AddData with this digest alongside the xxhash64-XOR fast hash. Off
+    * by default — it costs an extra distributed pass (count + chunk-aligned
+    * shuffle) per commit. */
   val ConfKey = "spark.graft.digest.sha3"
 
   /** Rows per chunk — part of the v1 digest definition, NOT a tuning knob:

@@ -2,7 +2,7 @@ package graft.operators
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -120,12 +120,6 @@ object Writer {
       newWatermark: Option[Timestamp]
   )
 
-  def computeStats(
-      df: DataFrame,
-      prevWatermark: Option[Timestamp] = None,
-      vocab: DatasetVocabulary = DatasetVocabulary.Default
-  ): Option[SliceStats] = computeStatsAndHash(df, prevWatermark, vocab).map(_._1)
-
   /**
    * Slice stats AND the layout-independent logical hash in ONE aggregation
    * pass — the commit path needs both, and a chain commit is latency-bound
@@ -157,16 +151,13 @@ object Writer {
         case (m, p)             => m.orElse(p)
       }
       val n = row.getAs[Long]("n")
-      val logical = f"${row.getAs[Long]("x")}%016x-$n%d"
+      val logical = logicalHashHex(row.getAs[Long]("x"), n)
       Some((SliceStats(row.getAs[Long]("o0"), row.getAs[Long]("o1"), n, wm), logical))
     }
   }
 
-  /** Parquet slice sink: single snappy file per slice (writer.rs:518-609). */
-  def writeSlice(df: DataFrame, path: String): Unit =
-    df.coalesce(1)
-      .write
-      .mode("overwrite")
-      .option("compression", "snappy")
-      .parquet(path)
+  /** The logical hash's text form: the XOR of the per-row hashes as 16 hex
+    * digits, a dash, and the row count. */
+  private[graft] def logicalHashHex(xor: Long, numRecords: Long): String =
+    f"$xor%016x-$numRecords%d"
 }

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -10,9 +8,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import graft.chain.MetadataChain
 import graft.dataset.Dataset
 import graft.ingest.IngestWriter
-import graft.model.MetadataEvent.{CheckpointRef, ExecuteTransform, SetDataSchema, TransformInputState}
-import graft.model.Op
-import graft.operators.{MergeStrategy, Writer}
+import graft.model.MetadataEvent.{CheckpointRef, ExecuteTransform, TransformInputState}
+import graft.operators.MergeStrategy
+import graft.transform.TransformService
 
 /**
  * Continuous derivative transforms: a dataset consumed as a stream, a
@@ -27,6 +25,11 @@ import graft.operators.{MergeStrategy, Writer}
  * with the dataset) replays unprocessed input files only, and the chain-side
  * interval guard skips a micro-batch whose input offsets were already
  * committed — so a foreachBatch retry after a crash can never double-append.
+ *
+ * Both commit shapes here ([[commitBatch]] per micro-batch, [[runStateful]]
+ * per run) keep only that interval guard and the checkpoint handling: the
+ * output slice goes through the ingest commit path
+ * ([[graft.ingest.IngestWriter.commitSlice]]), schema evolution included.
  */
 object StreamingTransform {
 
@@ -72,42 +75,13 @@ object StreamingTransform {
     if (bounds.isNullAt(1)) return None // empty batch
     val hi = bounds.getLong(1)
 
-    val prevHi = output.chain
-      .lastExecuteTransform()
-      .flatMap(_.inputs.find(_.datasetName == inputName))
-      .flatMap(_.newOffset)
+    val prevHi = TransformService.consumedOffset(output, inputName)
     if (prevHi.exists(_ >= hi)) return None // replayed batch -> skip
 
-    val withOp =
-      if (transformed.columns.contains(vocab.operationTypeColumn)) transformed
-      else transformed.withColumn(vocab.operationTypeColumn, lit(Op.Append))
-    val prevOffset = output.chain.lastOffset()
-    val stamped = Writer.stampSystemColumns(withOp, new Timestamp(systemTime), None, vocab)
-    val withOffsets = Writer.assignOffsets(
-      Writer.normalizeTimestamps(stamped),
-      MergeStrategy.totalOrder(stamped, vocab),
-      startOffset = prevOffset.map(_ + 1).getOrElse(0L),
-      vocab
-    )
-
-    val newData = IngestWriter.writeSliceFile(output.chain, withOffsets).map {
-      case (file, physicalHash) =>
-        val written = output.spark.read.parquet(file.toString)
-        val (stats, logical) = Writer
-          .computeStatsAndHash(written, output.chain.watermark().map(new Timestamp(_)), vocab)
-          .get
-        if (output.chain.schemaDdl().isEmpty)
-          output.chain.append(SetDataSchema(written.schema.toDDL), systemTime)
-        graft.model.MetadataEvent.AddData(
-          prevOffset = prevOffset,
-          offsetStart = stats.offsetStart,
-          offsetEnd = stats.offsetEnd,
-          numRecords = stats.numRecords,
-          physicalHash = physicalHash,
-          logicalHash = logical,
-          newWatermark = stats.newWatermark.map(_.getTime)
-        )
-    }
+    val newData = IngestWriter
+      .commitSlice(output, vocab, output.chain.lastOffset(), transformed,
+        MergeStrategy.totalOrder(_, vocab), systemTime)
+      .map(_._1)
     val ckpt = checkpointDir.flatMap(d => hashCheckpointDir(output.chain.fs, d))
     val event = ExecuteTransform(
       Seq(TransformInputState(inputName, prevHi, Some(hi))),
@@ -161,10 +135,7 @@ object StreamingTransform {
     val stage = new Path(output.chain.root, s"scratch/stream-stage-$queryName")
     val inputName = input.name
 
-    val prevHi = output.chain
-      .lastExecuteTransform()
-      .flatMap(_.inputs.find(_.datasetName == inputName))
-      .flatMap(_.newOffset)
+    val prevHi = TransformService.consumedOffset(output, inputName)
     val hiNow = input.chain.lastOffset()
 
     // Crash-resume disambiguation: a `_commit_intent` marker is written just
@@ -222,35 +193,11 @@ object StreamingTransform {
         if (df.isEmpty) None else Some(df)
     }
 
-    val prevOffset = output.chain.lastOffset()
     val newData = emitted.flatMap { df =>
-      val withOp =
-        if (df.columns.contains(vocab.operationTypeColumn)) df
-        else df.withColumn(vocab.operationTypeColumn, lit(Op.Append))
-      val stamped = Writer.stampSystemColumns(withOp, new Timestamp(systemTime), None, vocab)
-      val withOffsets = Writer.assignOffsets(
-        Writer.normalizeTimestamps(stamped),
-        MergeStrategy.totalOrder(stamped, vocab),
-        startOffset = prevOffset.map(_ + 1).getOrElse(0L),
-        vocab
-      )
-      IngestWriter.writeSliceFile(output.chain, withOffsets).map { case (file, physicalHash) =>
-        val written = spark.read.parquet(file.toString)
-        val (stats, logical) = Writer
-          .computeStatsAndHash(written, output.chain.watermark().map(new Timestamp(_)), vocab)
-          .get
-        if (output.chain.schemaDdl().isEmpty)
-          output.chain.append(SetDataSchema(written.schema.toDDL), systemTime)
-        graft.model.MetadataEvent.AddData(
-          prevOffset = prevOffset,
-          offsetStart = stats.offsetStart,
-          offsetEnd = stats.offsetEnd,
-          numRecords = stats.numRecords,
-          physicalHash = physicalHash,
-          logicalHash = logical,
-          newWatermark = stats.newWatermark.map(_.getTime)
-        )
-      }
+      IngestWriter
+        .commitSlice(output, vocab, output.chain.lastOffset(), df,
+          MergeStrategy.totalOrder(_, vocab), systemTime)
+        .map(_._1)
     }
 
     val ckpt = hashCheckpointDir(fs, checkpoint)

@@ -1,15 +1,11 @@
 package graft.transform
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.dataset.Dataset
 import graft.ingest.IngestWriter
-import graft.model.{MetadataEvent, Op}
 import graft.model.MetadataEvent._
-import graft.operators.{MergeStrategy, Writer}
+import graft.operators.MergeStrategy
 
 /**
  * Incremental derivative transforms: a dataset declares a SQL transform over
@@ -23,6 +19,13 @@ import graft.operators.{MergeStrategy, Writer}
  * chain slices overlapping the offset interval are scanned) with a residual
  * offset filter pushed into the parquet scan — an incremental run over a
  * 100 TB input reads only the new slice files.
+ *
+ * The output slice is committed by the same path as ingest
+ * ([[IngestWriter.commitSlice]]), so a derivative records a schema change
+ * (and rejects an incompatible one) exactly like a root does; the batch
+ * run, the streaming transforms and the replay in
+ * `Maintenance.verifyTransform` share the input-interval read, the SQL
+ * steps and the consumed-offset lookup defined here.
  */
 object TransformService {
 
@@ -37,44 +40,33 @@ object TransformService {
       engine: Option[String] = None): Unit =
     ds.chain.append(SetTransform(inputs, steps, engine), systemTime)
 
-  /** The (prev, new] offset interval of one input for the next run. */
-  private def inputInterval(
-      output: Dataset,
-      inputName: String,
-      input: Dataset
-  ): (Option[Long], Option[Long]) = {
-    val prev = output.chain
+  /** The input offset `output`'s last ExecuteTransform consumed from
+    * `inputName`: where the next run of that input starts. */
+  private[graft] def consumedOffset(output: Dataset, inputName: String): Option[Long] =
+    output.chain
       .lastExecuteTransform()
       .flatMap(_.inputs.find(_.datasetName == inputName))
       .flatMap(_.newOffset)
-    (prev, input.chain.lastOffset())
-  }
 
-  /** Scan only the slices of `input` that overlap (prev, new]. */
-  private def sliceDF(input: Dataset, prev: Option[Long], newOffset: Option[Long]): DataFrame = {
-    val vocab = input.vocabulary
-    val lo = prev.map(_ + 1).getOrElse(0L)
-    val hi = newOffset.getOrElse(-1L)
-    val slices = input.chain.slices().filter(s => s.offsetEnd >= lo && s.offsetStart <= hi)
-    if (slices.isEmpty) input.toDF().limit(0)
-    else {
-      val ddl = input.chain.schemaDdl()
-      val reader =
-        ddl.map(d => input.spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(d)))
-          .getOrElse(input.spark.read)
-      reader
-        .parquet(input.chain.slicePaths(slices): _*)
-        .filter(col(vocab.offsetColumn) >= lo && col(vocab.offsetColumn) <= hi)
+  /** Run declared SQL steps: each step but the last registers its result as
+    * a temp view under its alias; the last step's result is the output. */
+  private[graft] def runSteps(spark: SparkSession, steps: Seq[SqlStep]): DataFrame = {
+    val last = steps.lastOption.getOrElse(throw new IllegalStateException("SetTransform with no steps"))
+    steps.dropRight(1).foreach { s =>
+      val alias = s.alias.getOrElse(throw new IllegalStateException("intermediate step needs an alias"))
+      spark.sql(s.query).createOrReplaceTempView(alias)
     }
+    spark.sql(last.query)
   }
 
   /**
    * Execute one incremental run of `output`'s declared transform. Inputs are
    * resolved by name; each is registered as a temp view holding ONLY its new
-   * offset interval. Multi-step SQL: every step with an alias becomes a view;
-   * the last step (or the only one) produces the output rows, which are
-   * stamped, offset-assigned, written as a slice, and committed as an
-   * ExecuteTransform block.
+   * offset interval ([[Dataset.changesSince]]). Multi-step SQL: every step
+   * with an alias becomes a view; the last step (or the only one) produces
+   * the output rows, which go through the ingest commit path
+   * ([[IngestWriter.commitSlice]]: op, stamp, offsets, slice, hashes, schema
+   * evolution) and land as the new data of an ExecuteTransform block.
    */
   def executeTransform(
       output: Dataset,
@@ -98,12 +90,7 @@ object TransformService {
         // so a window finalizes as soon as any later-time slice arrives
         val wm = stream.withWatermark(in.vocabulary.eventTimeColumn, "0 seconds")
         wm.createOrReplaceTempView(decl.inputs.head)
-        decl.steps.init.foreach { s =>
-          val alias =
-            s.alias.getOrElse(throw new IllegalStateException("intermediate step needs an alias"))
-          spark.sql(s.query).createOrReplaceTempView(alias)
-        }
-        spark.sql(decl.steps.last.query)
+        runSteps(spark, decl.steps)
       }
       return graft.streaming.StreamingTransform.runStateful(
         output, in, fn, queryName = "decl", clock = () => systemTime) match {
@@ -114,40 +101,16 @@ object TransformService {
 
     val intervals = decl.inputs.map { name =>
       val in = resolve(name)
-      val (prev, newOff) = inputInterval(output, name, in)
-      (name, in, prev, newOff)
+      (name, in, consumedOffset(output, name), in.chain.lastOffset())
     }
 
     if (intervals.forall { case (_, _, prev, newOff) => prev == newOff }) return UpToDate
 
+    // an input with no data yet (newOff None) contributes no rows: upTo -1
     intervals.foreach { case (name, in, prev, newOff) =>
-      sliceDF(in, prev, newOff).createOrReplaceTempView(name)
+      in.changesSince(prev, upTo = newOff.orElse(Some(-1L))).createOrReplaceTempView(name)
     }
-    val result: DataFrame = decl.steps match {
-      case Seq() => throw new IllegalStateException("SetTransform with no steps")
-      case steps =>
-        steps.init.foreach { s =>
-          val alias =
-            s.alias.getOrElse(throw new IllegalStateException("intermediate step needs an alias"))
-          spark.sql(s.query).createOrReplaceTempView(alias)
-        }
-        spark.sql(steps.last.query)
-    }
-
-    val vocab = output.vocabulary
-    // Batch-SQL engines emit appends unless the query carries op through.
-    val withOp =
-      if (result.columns.contains(vocab.operationTypeColumn)) result
-      else result.withColumn(vocab.operationTypeColumn, lit(Op.Append))
-
-    val prevOffset = output.chain.lastOffset()
-    val stamped = Writer.stampSystemColumns(withOp, new Timestamp(systemTime), None, vocab)
-    val withOffsets = Writer.assignOffsets(
-      Writer.normalizeTimestamps(stamped),
-      MergeStrategy.totalOrder(stamped, vocab),
-      startOffset = prevOffset.map(_ + 1).getOrElse(0L),
-      vocab
-    )
+    val result = runSteps(spark, decl.steps)
 
     val inputStates = intervals.map { case (name, _, prev, newOff) =>
       TransformInputState(name, prev, newOff)
@@ -165,25 +128,11 @@ object TransformService {
       case (p, o)             => p.orElse(o)
     }
 
-    val newData = IngestWriter.writeSliceFile(output.chain, withOffsets).map {
-      case (file, physicalHash) =>
-        val written = spark.read.parquet(file.toString)
-        val (stats, logical) = Writer
-          .computeStatsAndHash(written, output.chain.watermark().map(new Timestamp(_)), vocab)
-          .get
-        if (output.chain.schemaDdl().isEmpty)
-          output.chain.append(SetDataSchema(written.schema.toDDL), systemTime)
-        AddData(
-          prevOffset = prevOffset,
-          offsetStart = stats.offsetStart,
-          offsetEnd = stats.offsetEnd,
-          numRecords = stats.numRecords,
-          physicalHash = physicalHash,
-          logicalHash = logical,
-          newWatermark = outWm
-        )
-    }
-
+    val vocab = output.vocabulary
+    val newData = IngestWriter
+      .commitSlice(output, vocab, output.chain.lastOffset(), result,
+        MergeStrategy.totalOrder(_, vocab), systemTime)
+      .map(_._1.copy(newWatermark = outWm))
     val event = ExecuteTransform(inputStates, newData)
     output.chain.append(event, systemTime)
     Updated(event)

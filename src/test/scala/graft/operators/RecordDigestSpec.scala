@@ -87,6 +87,16 @@ class RecordDigestSpec extends SparkSpec {
       assert(add.logicalHashSha3.isDefined)
       assert(Maintenance.verify(ds).isEmpty)
 
+      // a transform commit goes through the same path: its new data carries
+      // the digest too, and verify checks it
+      val d = Dataset.create(spark, Files.createTempDirectory("rd-derived-"), "rd_d", kind = "derivative")
+      graft.transform.TransformService.setTransform(
+        d, Seq("rd"), Seq(graft.model.MetadataEvent.SqlStep(None, "SELECT id, v FROM rd")), 1500L)
+      graft.transform.TransformService.executeTransform(d, _ => ds, 1600L)
+      val newData = d.chain.lastExecuteTransform().flatMap(_.newData)
+      assert(newData.exists(_.logicalHashSha3.isDefined))
+      assert(Maintenance.verify(d).isEmpty)
+
       // a forged sha3 on the block must be caught by verify
       val forged = add.copy(logicalHashSha3 = Some("0" * 64))
       // rewrite the chain head block with the forged event via reset+append

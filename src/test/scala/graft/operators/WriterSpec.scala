@@ -6,6 +6,7 @@ import java.time.Instant
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.ingest.IngestWriter
 import graft.model.DatasetVocabulary
 
 class WriterSpec extends SparkSpec {
@@ -58,20 +59,24 @@ class WriterSpec extends SparkSpec {
     )
   }
 
-  test("computeStats: offset interval + watermark clamped to never regress") {
+  test("computeStatsAndHash: stats, clamped watermark, logicalHash parity") {
     val df = Seq(
       (0L, ts("2021-01-01T00:00:00Z")),
       (1L, ts("2021-06-01T00:00:00Z")),
       (2L, ts("2021-03-01T00:00:00Z"))
     ).toDF("offset", "event_time")
-    val stats = Writer.computeStats(df, prevWatermark = None).get
+    val (stats, hash) = Writer.computeStatsAndHash(df, prevWatermark = None).get
     assert(stats.offsetStart === 0L && stats.offsetEnd === 2L && stats.numRecords === 3L)
     assert(stats.newWatermark === Some(ts("2021-06-01T00:00:00Z")))
+    // one encoding of the logical hash: the commit's equals the standalone one
+    assert(hash === IngestWriter.logicalHash(df))
+    assert(hash.endsWith("-3"))
     // previous watermark ahead of max(event_time) wins (monotonicity)
-    val clamped = Writer.computeStats(df, prevWatermark = Some(ts("2022-01-01T00:00:00Z"))).get
+    val (clamped, _) =
+      Writer.computeStatsAndHash(df, prevWatermark = Some(ts("2022-01-01T00:00:00Z"))).get
     assert(clamped.newWatermark === Some(ts("2022-01-01T00:00:00Z")))
     // empty batch -> no stats
-    assert(Writer.computeStats(df.filter(col("offset") < 0)).isEmpty)
+    assert(Writer.computeStatsAndHash(df.filter(col("offset") < 0)).isEmpty)
   }
 
   test("tail returns last n by offset in ascending order") {

@@ -113,6 +113,48 @@ class TransformSpec extends SparkSpec {
     assert(out.map(_.getAs[String]("tag")).toSeq === Seq("r1a", "r1b", "r2a"))
   }
 
+  test("derivative records an input's added column once; a retype is rejected") {
+    val work = Files.createTempDirectory("graft-evolve-")
+    val root = Dataset.create(spark, work.resolve("evr"), "evr")
+    IngestWriter.writeBatch(root, Seq((ts("2024-01-01T00:00:00Z"), "a")).toDF("event_time", "k"),
+      MergeStrategy.Append(), ms("2024-06-01T00:00:00Z"))
+    val d = Dataset.create(spark, work.resolve("evd"), "evd", kind = "derivative")
+    TransformService.setTransform(d, Seq("evr"), Seq(SqlStep(None, "SELECT * FROM evr")), 0L)
+    val resolve = (n: String) => Dataset.open(spark, work.resolve(n))
+    def schemaBlocks(): Int = resolve("evd").chain.blocks().count(
+      _.event.isInstanceOf[graft.model.MetadataEvent.SetDataSchema])
+    TransformService.executeTransform(d, resolve, ms("2024-06-02T00:00:00Z"))
+    assert(schemaBlocks() === 1)
+
+    // the root gains a column: the next run declares it, exactly once
+    def ingestExtra(k: String, extra: Long, sysTime: String): Unit =
+      IngestWriter.writeBatch(resolve("evr"),
+        Seq((ts("2024-01-02T00:00:00Z"), k, extra)).toDF("event_time", "k", "extra"),
+        MergeStrategy.Append(), ms(sysTime))
+    ingestExtra("b", 7L, "2024-06-03T00:00:00Z")
+    TransformService.executeTransform(d, resolve, ms("2024-06-04T00:00:00Z"))
+    assert(schemaBlocks() === 2)
+    val rows = resolve("evd").toDF().orderBy("offset").select("k", "extra").collect()
+      .map(r => (r.getString(0), Option(r.get(1)))).toSeq
+    assert(rows === Seq(("a", None), ("b", Some(7L))))
+
+    // same schema again: no further SetDataSchema
+    ingestExtra("c", 8L, "2024-06-05T00:00:00Z")
+    TransformService.executeTransform(d, resolve, ms("2024-06-06T00:00:00Z"))
+    assert(schemaBlocks() === 2)
+    assert(resolve("evd").toDF().count() === 3)
+
+    // an output that retypes a column is rejected before any block lands
+    TransformService.setTransform(resolve("evd"), Seq("evr"),
+      Seq(SqlStep(None, "SELECT event_time, length(k) AS k, extra FROM evr")), ms("2024-06-07T00:00:00Z"))
+    ingestExtra("d", 9L, "2024-06-08T00:00:00Z")
+    val head = resolve("evd").chain.head
+    val e = intercept[IllegalArgumentException](
+      TransformService.executeTransform(resolve("evd"), resolve, ms("2024-06-09T00:00:00Z")))
+    assert(e.getMessage.contains("column 'k' retyped"))
+    assert(resolve("evd").chain.head === head)
+  }
+
   test("pullPlan: depth levels group independent datasets; cycles rejected") {
     val work = Files.createTempDirectory("graft-plan-pull-")
     def mk(name: String, inputs: Seq[String]): Dataset = {
