@@ -124,10 +124,6 @@ final class MetadataChain private (val root: Path, val fs: FileSystem, conf: Con
     acc.result().reverse
   }
 
-  /** Hash of the reachable block with the given sequence number. */
-  def hashAt(seq: Long): Option[String] =
-    blocksWithHashes().collectFirst { case (b, h) if b.sequenceNumber == seq => h }
-
   /** Write a block file WITHOUT moving the head ref — the staging half of an
     * append. Returns (block, hash). Used by append and by chain rewrites
     * (compaction), which stage a whole new chain next to the old one and

@@ -2,8 +2,9 @@ package graft.ingest
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import graft.chain.MetadataChain
 import graft.dataset.Dataset
@@ -19,11 +20,13 @@ import graft.operators.{MergeStrategy, RecordDigest, Writer}
  * after the merge is [[commitSlice]], which batch and streaming transforms
  * commit through as well.
  *
- * Scale notes: the merge and offset assignment are fully distributed (see
- * Writer.assignOffsets); only the final single-file slice write funnels
- * through one task — intentional, because ODF slices are bounded at
- * ≤300k records / ≤1 GiB (compaction_planner_impl.rs:221-229), so "one file
- * per slice" is a bounded cost, not a scale bottleneck.
+ * Scale notes: the merge is distributed; the slice itself is sorted,
+ * numbered and written as one file by ONE task (see Writer.assignOffsets) —
+ * intentional, because ODF slices are bounded at ≤300k records / ≤1 GiB
+ * (compaction_planner_impl.rs:221-229), so "one task per slice" is a bounded
+ * cost, not a scale bottleneck. A commit is then one shuffle and one write
+ * job: the slice stats and logical hash are observed on that write, not
+ * computed by a second pass.
  */
 object IngestWriter {
 
@@ -115,10 +118,11 @@ object IngestWriter {
   /**
    * The one slice-commit path of ingest, batch transforms and streaming
    * transforms: [[sliceRows]] after the chain's `prevOffset` → single-file
-   * slice → re-read → stats and logical hash, a validated SetDataSchema
-   * appended when the written schema changed, and the SHA3 record digest
-   * when [[RecordDigest]] is on. Returns the AddData, NOT yet appended, with
-   * the frame re-read from the written file; None when the rows are empty.
+   * slice with its stats and logical hash observed on the write, a validated
+   * SetDataSchema appended when the written schema changed, and the SHA3
+   * record digest when [[RecordDigest]] is on. Returns the AddData, NOT yet
+   * appended, with a lazy read of the written file; None when the rows are
+   * empty.
    * Callers keep their own policy: ingest adds the source state, the batch
    * transform its watermark, transforms the ExecuteTransform wrapper.
    * `vocab` and `prevOffset` come from the caller, which reads them anyway:
@@ -136,13 +140,13 @@ object IngestWriter {
     val chain = ds.chain
     val sliced = sliceRows(
       rows, sortOrder, systemTime, eventTimeFallback, prevOffset.map(_ + 1).getOrElse(0L), vocab)
-    writeSliceFile(chain, sliced).map { case (file, physicalHash) =>
-      // Stats + logical hash in one pass over a re-read of the written
-      // file, so they are guaranteed to describe the slice as persisted
-      // (writer.rs:613-712).
-      val written = ds.spark.read.parquet(file.toString)
-      val (stats, logical) =
-        Writer.computeStatsAndHash(written, chain.watermark().map(new Timestamp(_)), vocab).get
+    writeSliceFile(chain, sliced, vocab).map { case (file, physicalHash, agg) =>
+      // Stats + logical hash observed on the rows as the write consumed
+      // them (writer.rs:613-712); verify re-reads the file to check them.
+      val (stats, logical) = Writer.sliceStats(agg, chain.watermark().map(new Timestamp(_)))
+      // A parquet read reports every field nullable; reading with that
+      // schema spares the footer-inference job.
+      val written = ds.spark.read.schema(asNullable(sliced.schema)).parquet(file.toString)
 
       // First write declares the schema; a later slice whose written schema
       // differs (e.g. a new column) appends a fresh SetDataSchema — the
@@ -400,9 +404,23 @@ object IngestWriter {
           s"(only additive columns or lossless type widening are allowed)")
   }
 
+  /** `t` as a parquet read reports it: every field, element and value
+    * nullable. */
+  private def asNullable(t: StructType): StructType = {
+    def go(d: DataType): DataType = d match {
+      case s: StructType => asNullable(s)
+      case ArrayType(e, _) => ArrayType(go(e), containsNull = true)
+      case MapType(k, v, _) => MapType(go(k), go(v), valueContainsNull = true)
+      case other => other
+    }
+    StructType(t.fields.map(f => f.copy(dataType = go(f.dataType), nullable = true)))
+  }
+
   /**
    * Write a DataFrame as a single snappy parquet file under `data/<hash>`;
-   * returns the final path + physical hash, or None for an empty input.
+   * returns the final path, the physical hash and the
+   * [[Writer.sliceAggregate]] values observed on the write, or None for an
+   * empty input.
    * Physical hash = SHA-256 of the file bytes, streamed through the chain's
    * Hadoop FileSystem — fine to compute driver-side because slices are
    * size-bounded. Staging happens in a SIBLING `staging/` dir (same
@@ -412,39 +430,36 @@ object IngestWriter {
    * consumer listing it mid-write must only ever see final
    * content-addressed files, not transient part files it would double-read.
    */
-  private[graft] def writeSliceFile(
+  private def writeSliceFile(
       chain: MetadataChain,
-      df: DataFrame
-  ): Option[(org.apache.hadoop.fs.Path, String)] = {
+      df: DataFrame,
+      vocab: DatasetVocabulary
+  ): Option[(org.apache.hadoop.fs.Path, String, Map[String, Any])] = {
     val fs = chain.fs
     val tmp = new org.apache.hadoop.fs.Path(
       new org.apache.hadoop.fs.Path(chain.root, "staging"),
       s"tmp-${java.util.UUID.randomUUID()}")
-    df.coalesce(1)
+    val stats = Observation()
+    val aggs = Writer.sliceAggregate(df, vocab)
+    df.observe(stats, aggs.head, aggs.tail: _*)
+      .coalesce(1)
       .write
       .mode("overwrite")
       .option("compression", "snappy")
       .parquet(tmp.toString)
-    val part = fs.listStatus(tmp)
-      .map(_.getPath)
-      .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-    val result = part.flatMap { p =>
-      // A parquet file with zero rows still gets written (footer only, well
-      // under 1 KiB of payload); detect emptiness from the FILE SIZE instead
-      // of a count() scan — one fewer Spark job on every chain commit. The
-      // smallest 1-row snappy file observed is ~1.5 KiB; an empty single
-      // file is ~400-800 bytes of pure footer. The caller's stats pass
-      // (numRecords) is the authoritative check; this is the fast path for
-      // the common identical-snapshot no-op.
-      val isEmpty = fs.getFileStatus(p).getLen < 1024 &&
-        df.sparkSession.read.parquet(p.toString).isEmpty
-      if (isEmpty) None
-      else {
-        val hash = chain.sha256HexOf(p)
-        val target = chain.dataFile(hash)
-        if (!fs.exists(target)) fs.rename(p, target)
-        Some((target, hash))
-      }
+    // An empty input still writes a footer-only file; the observed count
+    // (complete once the write has returned) says whether to keep it.
+    val agg = stats.get
+    val part =
+      if (agg("n") == 0L) None
+      else fs.listStatus(tmp)
+        .map(_.getPath)
+        .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
+    val result = part.map { p =>
+      val hash = chain.sha256HexOf(p)
+      val target = chain.dataFile(hash)
+      if (!fs.exists(target)) fs.rename(p, target)
+      (target, hash, agg)
     }
     // clean up the tmp dir (part file moved out or empty)
     fs.delete(tmp, true)
@@ -461,10 +476,7 @@ object IngestWriter {
    * — holds; cross-implementation interop hashes do not.
    */
   def logicalHash(df: DataFrame): String = {
-    val h = df
-      .select(xxhash64(df.columns.map(col).toSeq: _*).as("h"))
-      .agg(expr("bit_xor(h)").as("x"), count(lit(1)).as("n"))
-      .head()
+    val h = df.select(Writer.rowHashXor(df).as("x"), count(lit(1)).as("n")).head()
     Writer.logicalHashHex(h.getAs[Long]("x"), h.getAs[Long]("n"))
   }
 }

@@ -88,20 +88,16 @@ object Maintenance {
       .parquet(stagingOut.toString)
 
     // Per-slice stats + logical hashes in ONE aggregation pass — the
-    // XOR-of-row-hashes construction of [[Writer.computeStatsAndHash]],
-    // grouped by slice id (the XOR aggregate distributes over grouping).
+    // commit's [[Writer.sliceAggregate]], grouped by slice id (the XOR
+    // aggregate distributes over grouping).
     // Hash input is the original column set in original order, exactly what
     // re-reading a staged file would yield (`_slice` lives in the directory
     // name, not the file). The collected result is numSlices rows — metadata
     // scale, never data scale.
+    val aggs = Writer.sliceAggregate(all, vocab)
     val sliceStats = all
-      .withColumn("__h", xxhash64(all.columns.map(col).toSeq: _*))
       .groupBy(sliceCol.as("_slice"))
-      .agg(
-        count(lit(1)).as("n"),
-        max(col(vocab.eventTimeColumn)).as("wm"),
-        expr("bit_xor(__h)").as("x")
-      )
+      .agg(aggs.head, aggs.tail: _*)
       .collect()
       .map(r => r.getAs[Long]("_slice") -> r)
       .toMap
@@ -303,18 +299,17 @@ object Maintenance {
       if (actual != declared)
         issues += ChainIssue(s"block $name: content hash $actual != filename hash $declared")
     }
-    val blocks = chain.blocks()
-    blocks.sliding(2).foreach {
-      case Seq(a, b) =>
-        val aHash = chain.hashAt(a.sequenceNumber)
-        if (b.prevBlockHash != aHash)
+    // links and sequence numbers, over one walk of the chain
+    chain.blocksWithHashes().sliding(2).foreach {
+      case Seq((a, aHash), (b, _)) =>
+        if (!b.prevBlockHash.contains(aHash) || b.sequenceNumber != a.sequenceNumber + 1)
           issues += ChainIssue(
-            s"block ${b.sequenceNumber}: prevBlockHash ${b.prevBlockHash} != ${aHash}"
-          )
+            s"block ${b.sequenceNumber}: does not follow block ${a.sequenceNumber} ($aHash)")
       case _ => ()
     }
 
     // slice integrity
+    val vocab = ds.vocabulary
     var prevEnd: Option[Long] = None
     chain.slices().foreach { s =>
       val file = chain.dataFile(s.physicalHash)
@@ -328,18 +323,20 @@ object Maintenance {
           // may not even parse as parquet
           try {
             val df = ds.spark.read.parquet(file.toString)
-            val logical = IngestWriter.logicalHash(df)
+            // logical hash and record count from the commit's one aggregate
+            val agg = df.select(Writer.sliceAggregate(df, vocab): _*).head()
+            val n = agg.getAs[Long]("n")
+            val logical = Writer.logicalHashHex(agg.getAs[Long]("x"), n)
             if (logical != s.logicalHash)
               issues += SliceIssue(
                 s.physicalHash,
                 s"logical hash mismatch: $logical vs ${s.logicalHash}"
               )
-            if (df.count() != s.numRecords)
+            if (n != s.numRecords)
               issues += SliceIssue(s.physicalHash, "record count mismatch")
             // second logical hash (SHA3-256 record digest) — checked
             // whenever the commit recorded one
             s.logicalHashSha3.foreach { expected =>
-              val vocab = chain.vocabulary()
               val sha3 = graft.operators.RecordDigest.digest(df.orderBy(vocab.offsetColumn))
               if (sha3 != expected)
                 issues += SliceIssue(

@@ -10,17 +10,17 @@ import graft.model.DatasetVocabulary
 
 /**
  * The ingest writer tail: stamp system columns, assign offsets, normalize
- * column order, compute slice stats. Mirrors the reference's
+ * column order, and the slice stats aggregate. Mirrors the reference's
  * `DataWriterDataFusion` staging pipeline
- * (src/infra/ingest-datafusion/src/writer.rs:274-385, 613-712) with one major
- * departure for scale:
+ * (src/infra/ingest-datafusion/src/writer.rs:274-385, 613-712).
  *
- * Offsets. The reference pins `target_partitions = 1` and uses
- * `row_number() over (order by ...)` (writer.rs:339-371), which serializes the
- * whole batch through one partition. We instead do a distributed total sort
- * (range-partitioned, spill-safe) followed by `zipWithIndex` — deterministic
- * given a deterministic sort, and parallel across the cluster. At 100 TB the
- * sort is the only global exchange; no single-partition bottleneck.
+ * Offsets. Like the reference, which pins `target_partitions = 1` and numbers
+ * rows with `row_number() over (order by ...)` (writer.rs:339-371), a slice is
+ * sorted and numbered in ONE task. ODF bounds a slice at ≤300k records
+ * (compaction_planner_impl.rs:221-229), and the slice is written as one file
+ * by one task anyway, so the shuffle into that task is the only exchange and
+ * numbering costs no job of its own: no checkpoint, no per-partition count,
+ * no base-offset join.
  */
 object Writer {
 
@@ -54,19 +54,12 @@ object Writer {
   }
 
   /**
-   * Deterministic, distributed offset assignment: total sort by the merge
-   * strategy's sort order, then dense offsets from per-partition row indexes
-   * plus per-partition base offsets. Column order is normalized to
+   * Dense offsets from `startOffset` in `sortOrder`: the rows are shuffled
+   * into one partition, sorted there, and numbered by
+   * `monotonically_increasing_id`, which in partition 0 is the row index.
+   * Deterministic given a total sort order; the offset column is non-null by
+   * construction. Column order is normalized to
    * `offset, op, system_time, event_time, <data>` (writer.rs:374-383).
-   *
-   * Stays in the Dataset API end to end (no RDD round-trip through boxed
-   * Rows): the sorted frame is localCheckpoint'd ONCE so both passes see the
-   * identical partitioning (a re-executed range sort could re-sample
-   * different boundaries), then `monotonically_increasing_id` encodes
-   * (partitionId << 33 | rowIndexInPartition) — a documented stable layout —
-   * from which a tiny per-partition count collect + broadcast base-offset
-   * join produces dense offsets entirely inside whole-stage codegen. The
-   * driver only ever sees one row per partition, never data.
    */
   def assignOffsets(
       df: DataFrame,
@@ -74,30 +67,11 @@ object Writer {
       startOffset: Long = 0L,
       vocab: DatasetVocabulary = DatasetVocabulary.Default
   ): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val sorted =
-      (if (sortOrder.nonEmpty) df.orderBy(sortOrder: _*) else df).localCheckpoint()
-    val mid = monotonically_increasing_id()
-    val pid = shiftrightunsigned(col("__mid"), 33)
-    val idxInPartition = col("__mid").bitwiseAND(lit((1L << 33) - 1))
-    val withMid = sorted.withColumn("__mid", mid)
-    val counts = withMid
-      .groupBy(pid.as("__pid"))
-      .agg(count(lit(1)).as("__n"))
-      .orderBy("__pid")
-      .collect()
-    var acc = startOffset
-    val bases = counts.map { r =>
-      val b = (r.getLong(0), acc); acc += r.getLong(1); b
-    }.toSeq
-    val baseDf = bases.toDF("__pid", "__base")
-    val out = withMid
-      .withColumn("__pid", pid)
-      .join(broadcast(baseDf), Seq("__pid"))
-      .withColumn(vocab.offsetColumn, col("__base") + idxInPartition)
-      .drop("__pid", "__mid", "__base")
-    normalizeColumnOrder(Nullability.markNotNull(out, Seq(vocab.offsetColumn)), vocab)
+    val one = df.repartition(1)
+    val sorted = if (sortOrder.nonEmpty) one.sortWithinPartitions(sortOrder: _*) else one
+    normalizeColumnOrder(
+      sorted.withColumn(vocab.offsetColumn, lit(startOffset) + monotonically_increasing_id()),
+      vocab)
   }
 
   /** `offset, op, system_time, event_time, <data cols in input order>`. */
@@ -121,39 +95,37 @@ object Writer {
   )
 
   /**
-   * Slice stats AND the layout-independent logical hash in ONE aggregation
-   * pass — the commit path needs both, and a chain commit is latency-bound
-   * by its job count, so they must not be two scans. The hash is the
-   * XOR-aggregate of per-row xxhash64 over all columns (order- and
-   * partitioning-independent; rows are unique by offset) suffixed with the
-   * row count — same encoding as [[graft.ingest.IngestWriter.logicalHash]].
+   * The slice stats aggregate: offset bounds `o0`/`o1`, row count `n`, max
+   * event time `wm` and the logical hash's [[rowHashXor]] `x`. The commit
+   * observes it on the slice write itself, compaction groups it by slice and
+   * verify runs it over a re-read, so all three use one encoding.
    */
-  def computeStatsAndHash(
-      df: DataFrame,
-      prevWatermark: Option[Timestamp] = None,
-      vocab: DatasetVocabulary = DatasetVocabulary.Default
-  ): Option[(SliceStats, String)] = {
-    val row = df
-      .withColumn("__h", xxhash64(df.columns.map(col).toSeq: _*))
-      .agg(
-        min(col(vocab.offsetColumn)).as("o0"),
-        max(col(vocab.offsetColumn)).as("o1"),
-        count(lit(1)).as("n"),
-        max(col(vocab.eventTimeColumn)).as("wm"),
-        expr("bit_xor(__h)").as("x")
-      )
-      .head()
-    if (row.getAs[Long]("n") == 0L) None
-    else {
-      val maxEvent = Option(row.getAs[Timestamp]("wm"))
-      val wm = (maxEvent, prevWatermark) match {
-        case (Some(m), Some(p)) => Some(if (m.before(p)) p else m)
-        case (m, p)             => m.orElse(p)
-      }
-      val n = row.getAs[Long]("n")
-      val logical = logicalHashHex(row.getAs[Long]("x"), n)
-      Some((SliceStats(row.getAs[Long]("o0"), row.getAs[Long]("o1"), n, wm), logical))
+  private[graft] def sliceAggregate(df: DataFrame, vocab: DatasetVocabulary): Seq[Column] = Seq(
+    min(col(vocab.offsetColumn)).as("o0"),
+    max(col(vocab.offsetColumn)).as("o1"),
+    count(lit(1)).as("n"),
+    max(col(vocab.eventTimeColumn)).as("wm"),
+    rowHashXor(df).as("x"))
+
+  /** XOR-aggregate of per-row xxhash64 over all columns: order- and
+    * partitioning-independent (rows are unique by offset). */
+  private[graft] def rowHashXor(df: DataFrame): Column =
+    bit_xor(xxhash64(df.columns.map(col).toSeq: _*))
+
+  /** Stats and logical hash of a non-empty slice from its [[sliceAggregate]]
+    * values, the watermark clamped to `prevWatermark`. */
+  private[graft] def sliceStats(
+      agg: Map[String, Any],
+      prevWatermark: Option[Timestamp]
+  ): (SliceStats, String) = {
+    val maxEvent = Option(agg("wm").asInstanceOf[Timestamp])
+    val wm = (maxEvent, prevWatermark) match {
+      case (Some(m), Some(p)) => Some(if (m.before(p)) p else m)
+      case (m, p)             => m.orElse(p)
     }
+    val n = agg("n").asInstanceOf[Long]
+    (SliceStats(agg("o0").asInstanceOf[Long], agg("o1").asInstanceOf[Long], n, wm),
+      logicalHashHex(agg("x").asInstanceOf[Long], n))
   }
 
   /** The logical hash's text form: the XOR of the per-row hashes as 16 hex

@@ -111,7 +111,7 @@ object StreamingOps {
    * [[graft.operators.Changelog.project]].
    *
    * Scale shape per tick: one key shuffle for the in-batch dedupe window,
-   * one state-vs-batch CDC hash join, and the distributed offset
+   * one state-vs-batch CDC hash join, and the single-task offset
    * assignment — history is read (column-pruned) but never rewritten;
    * the append is O(delta).
    */

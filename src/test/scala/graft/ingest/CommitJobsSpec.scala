@@ -12,9 +12,10 @@ import graft.operators.MergeStrategy
 import graft.transform.TransformService
 
 /** Spark jobs per slice commit. A chain commit is latency-bound by its job
-  * count, so the ingest and the transform commit are pinned at the 10 jobs
-  * each submits (offsets, slice write, stats and hash, and the AQE stage
-  * jobs around them): a change that adds a pass over the slice fails here. */
+  * count, so the ingest and the transform commit are pinned at the 2 jobs
+  * each submits: the shuffle of the slice's rows into one task (an AQE stage
+  * job) and the slice write, which also yields the offsets, stats and hash.
+  * A change that adds a pass over the slice fails here. */
 class CommitJobsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -39,15 +40,15 @@ class CommitJobsSpec extends SparkSpec {
     finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("an Append writeBatch of one new slice submits at most 10 Spark jobs") {
+  test("an Append writeBatch of one new slice submits at most 2 Spark jobs") {
     val ds = Dataset.create(spark, Files.createTempDirectory("graft-jobs-ingest-"), "jobs_in")
     IngestWriter.writeBatch(ds, batch("a"), MergeStrategy.Append(), 1000L)
     val jobs = jobsOf(IngestWriter.writeBatch(ds, batch("b"), MergeStrategy.Append(), 2000L))
     assert(ds.chain.slices().size === 2)
-    assert(jobs <= 10, s"writeBatch submitted $jobs jobs")
+    assert(jobs <= 2, s"writeBatch submitted $jobs jobs")
   }
 
-  test("an executeTransform over one new input slice submits at most 10 Spark jobs") {
+  test("an executeTransform over one new input slice submits at most 2 Spark jobs") {
     val work = Files.createTempDirectory("graft-jobs-transform-")
     val root = Dataset.create(spark, work.resolve("jobs_root"), "jobs_root")
     IngestWriter.writeBatch(root, batch("a"), MergeStrategy.Append(), 1000L)
@@ -59,6 +60,6 @@ class CommitJobsSpec extends SparkSpec {
     IngestWriter.writeBatch(root, batch("b"), MergeStrategy.Append(), 2000L)
     val jobs = jobsOf(TransformService.executeTransform(d, resolve, 2500L))
     assert(d.chain.slices().size === 2)
-    assert(jobs <= 10, s"executeTransform submitted $jobs jobs")
+    assert(jobs <= 2, s"executeTransform submitted $jobs jobs")
   }
 }

@@ -146,6 +146,28 @@ class MaintenanceSpec extends SparkSpec {
     assert(issues.exists(_.msg.contains("physical hash mismatch")), issues.mkString("; "))
   }
 
+  test("verify: a forged record count is detected") {
+    val ds = Dataset.create(spark, Files.createTempDirectory("graft-maint-count-"), "count")
+    val rows = spark.range(0, 5).select(col("id"), (col("id") * 2).as("v"))
+    val (added, _) = IngestWriter
+      .commitSlice(ds, ds.vocabulary, None, rows, MergeStrategy.Append().sortOrder, 1000L).get
+    ds.chain.append(added.copy(numRecords = added.numRecords + 1), 1000L)
+    assert(Maintenance.verify(ds) ===
+      Seq(Maintenance.SliceIssue(added.physicalHash, "record count mismatch")))
+  }
+
+  test("verify: a block whose sequence number skips is detected") {
+    val ds = mkDataset(slices = 1, rowsPerSlice = 3)
+    val (seq, head) = ds.chain.head.get
+    val (forged, h) = ds.chain.writeDetachedBlock(
+      Some((seq + 4, head)), graft.model.MetadataEvent.SetDataSchema("id BIGINT"), 5000L)
+    ds.chain.setHead(forged.sequenceNumber, h)
+    assert(Maintenance.verify(ds).exists {
+      case Maintenance.ChainIssue(msg) => msg.startsWith(s"block ${seq + 5}: does not follow")
+      case _                           => false
+    })
+  }
+
   test("verify: tampered block file is detected") {
     val ds = mkDataset(slices = 1, rowsPerSlice = 3)
     // the Seed block is the one containing the dataset name "m"

@@ -1,12 +1,15 @@
 package graft.operators
 
+import java.nio.file.Files
 import java.sql.Timestamp
 import java.time.Instant
 
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.dataset.Dataset
 import graft.ingest.IngestWriter
+import graft.maintenance.Maintenance
 import graft.model.DatasetVocabulary
 
 class WriterSpec extends SparkSpec {
@@ -59,24 +62,29 @@ class WriterSpec extends SparkSpec {
     )
   }
 
-  test("computeStatsAndHash: stats, clamped watermark, logicalHash parity") {
+  test("commitSlice: stats, clamped watermark, logicalHash parity") {
+    val ds = Dataset.create(spark, Files.createTempDirectory("graft-writer-stats-"), "stats")
     val df = Seq(
       (0L, ts("2021-01-01T00:00:00Z")),
       (1L, ts("2021-06-01T00:00:00Z")),
       (2L, ts("2021-03-01T00:00:00Z"))
-    ).toDF("offset", "event_time")
-    val (stats, hash) = Writer.computeStatsAndHash(df, prevWatermark = None).get
+    ).toDF("k", "event_time")
+    def commit(rows: org.apache.spark.sql.DataFrame) =
+      IngestWriter.commitSlice(ds, DatasetVocabulary.Default, None, rows, _ => Seq(col("k")), 1000L)
+    val (stats, written) = commit(df).get
     assert(stats.offsetStart === 0L && stats.offsetEnd === 2L && stats.numRecords === 3L)
-    assert(stats.newWatermark === Some(ts("2021-06-01T00:00:00Z")))
+    assert(stats.newWatermark === Some(ts("2021-06-01T00:00:00Z").getTime))
     // one encoding of the logical hash: the commit's equals the standalone one
-    assert(hash === IngestWriter.logicalHash(df))
-    assert(hash.endsWith("-3"))
+    val file = ds.chain.dataFile(stats.physicalHash).toString
+    assert(stats.logicalHash === IngestWriter.logicalHash(spark.read.parquet(file)))
+    assert(stats.logicalHash === IngestWriter.logicalHash(written))
+    assert(stats.logicalHash.endsWith("-3"))
     // previous watermark ahead of max(event_time) wins (monotonicity)
-    val (clamped, _) =
-      Writer.computeStatsAndHash(df, prevWatermark = Some(ts("2022-01-01T00:00:00Z"))).get
-    assert(clamped.newWatermark === Some(ts("2022-01-01T00:00:00Z")))
+    Maintenance.setWatermark(ds, ts("2022-01-01T00:00:00Z").getTime, 1500L)
+    val (clamped, _) = commit(df).get
+    assert(clamped.newWatermark === Some(ts("2022-01-01T00:00:00Z").getTime))
     // empty batch -> no stats
-    assert(Writer.computeStatsAndHash(df.filter(col("offset") < 0)).isEmpty)
+    assert(commit(df.filter(col("k") < 0)).isEmpty)
   }
 
   test("tail returns last n by offset in ascending order") {
