@@ -1,15 +1,16 @@
 package graft.chain
 
-import java.io.ByteArrayOutputStream
+import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 
 import org.json4s.{Formats, ShortTypeHints}
 import org.json4s.jackson.Serialization
 
+import graft.FsAtomic
 import graft.model.{DatasetVocabulary, MergeConf, MetadataBlock, MetadataEvent}
 import graft.model.MetadataEvent._
 
@@ -37,7 +38,7 @@ import graft.model.MetadataEvent._
  * SHA-256 over the canonical serialized form — `prevBlockHash` inside the
  * block is what makes the chain tamper-evident, like a git history.
  */
-final class MetadataChain private (val root: Path, val fs: FileSystem, conf: Configuration) {
+final class MetadataChain private (val root: Path, val fs: FileSystem) {
   import MetadataChain._
 
   def blocksDir: Path = new Path(root, "blocks")
@@ -83,14 +84,11 @@ final class MetadataChain private (val root: Path, val fs: FileSystem, conf: Con
         .sortBy(_.getName)
 
   /** (sequenceNumber, blockHash) of the head, if any block exists. */
-  def head: Option[(Long, String)] = {
-    val f = new Path(refsDir, "head")
-    if (!fs.exists(f)) None
-    else {
-      val Array(seq, hash) = readString(f).trim.split(" ")
+  def head: Option[(Long, String)] =
+    try {
+      val Array(seq, hash) = readString(new Path(refsDir, "head")).trim.split(" ")
       Some((seq.toLong, hash))
-    }
-  }
+    } catch { case _: FileNotFoundException => None }
 
   /** hash → block file path, from the directory listing. The listing is an
     * index, not the source of truth: chain membership is decided by walking
@@ -107,21 +105,37 @@ final class MetadataChain private (val root: Path, val fs: FileSystem, conf: Con
     blocksWithHashes(asOfHash).map(_._1)
 
   /** (block, hash) pairs in sequence order — one walk, hashes from the
-    * content-addressed filenames. */
-  def blocksWithHashes(asOfHash: Option[String] = None): Seq[(MetadataBlock, String)] = {
-    val byHash = blockFilesByHash()
-    val start = asOfHash.orElse(head.map(_._2))
-    val acc = List.newBuilder[(MetadataBlock, String)]
-    var cur = start
+    * content-addressed filenames.
+    * A block hash names its whole prefix, so the blocks reachable from a
+    * hash never change: the walk keeps them in a per-JVM cache ([[Walks]])
+    * and reads back only to the nearest hash found there. The head ref is
+    * still read on every call, so a reset, a compaction or another
+    * process's commit is seen at once. [[graft.maintenance.Maintenance]]'s
+    * `verify` re-hashes every block file on disk, which is what ties the
+    * cached blocks to the bytes. */
+  def blocksWithHashes(asOfHash: Option[String] = None): Seq[(MetadataBlock, String)] =
+    asOfHash.orElse(head.map(_._2)).fold(Seq.empty[(MetadataBlock, String)])(walk(_).reverse)
+
+  /** The blocks reachable from `hash`, newest first. */
+  private def walk(hash: String): List[(MetadataBlock, String)] = {
+    lazy val byHash = blockFilesByHash()
+    val fresh = List.newBuilder[(MetadataBlock, String)]
+    var known = List.empty[(MetadataBlock, String)]
+    var cur = Option(hash)
     while (cur.isDefined) {
       val h = cur.get
-      val p = byHash.getOrElse(h, throw new IllegalStateException(
-        s"block $h not found in chain at $root"))
-      val b = read(p)
-      acc += ((b, h))
-      cur = b.prevBlockHash
+      Walks.get(root, h) match {
+        case Some(blocks) => known = blocks; cur = None
+        case None =>
+          val b = read(byHash.getOrElse(h,
+            throw new IllegalStateException(s"block $h not found in chain at $root")))
+          fresh += ((b, h))
+          cur = b.prevBlockHash
+      }
     }
-    acc.result().reverse
+    val blocks = fresh.result() ::: known
+    if (blocks ne known) Walks.put(root, hash, blocks)
+    blocks
   }
 
   /** Write a block file WITHOUT moving the head ref — the staging half of an
@@ -138,6 +152,10 @@ final class MetadataChain private (val root: Path, val fs: FileSystem, conf: Con
     val hash = sha256Hex(json.getBytes(StandardCharsets.UTF_8))
     fs.mkdirs(blocksDir)
     writeString(new Path(blocksDir, f"${block.sequenceNumber}%06d-$hash.json"), json)
+    // The walk from the new block is its parent's plus the block, as a
+    // read of the file would give it.
+    prev.fold(Option(List.empty[(MetadataBlock, String)]))(p => Walks.get(root, p._2))
+      .foreach(known => Walks.put(root, hash, (parse(json), hash) :: known))
     (block, hash)
   }
 
@@ -193,13 +211,8 @@ final class MetadataChain private (val root: Path, val fs: FileSystem, conf: Con
     * commit point of every chain mutation: a crash before it leaves the old
     * chain fully intact (staged block files are unreachable, not corrupting),
     * a crash after it leaves the new chain fully committed. */
-  def setHead(seq: Long, hash: String): Unit = {
-    fs.mkdirs(refsDir)
-    val tmp = new Path(refsDir, s".head-tmp-${java.util.UUID.randomUUID()}")
-    writeString(tmp, s"$seq $hash")
-    val fc = FileContext.getFileContext(root.toUri, conf)
-    fc.rename(tmp, new Path(refsDir, "head"), Options.Rename.OVERWRITE)
-  }
+  def setHead(seq: Long, hash: String): Unit =
+    FsAtomic.write(fs, new Path(refsDir, "head"), s"$seq $hash".getBytes(StandardCharsets.UTF_8))
 
   /** Append an event as a new block; returns (block, hash). */
   def append(event: MetadataEvent, systemTime: Long): (MetadataBlock, String) = {
@@ -358,8 +371,7 @@ final class MetadataChain private (val root: Path, val fs: FileSystem, conf: Con
     * (raw, so tampered files hash instead of throwing — see [[readFs]]). */
   def sha256HexOf(p: Path): String = MetadataChain.sha256HexOf(readFs, p)
 
-  private def read(p: Path): MetadataBlock =
-    Serialization.read[MetadataBlock](readString(p))(formats, manifest[MetadataBlock])
+  private def read(p: Path): MetadataBlock = parse(readString(p))
 }
 
 object MetadataChain {
@@ -405,13 +417,13 @@ object MetadataChain {
     fs.mkdirs(new Path(qualified, "refs"))
     fs.mkdirs(new Path(qualified, "data"))
     fs.mkdirs(new Path(qualified, "checkpoints"))
-    new MetadataChain(qualified, fs, conf)
+    new MetadataChain(qualified, fs)
   }
 
   def open(root: Path, conf: Configuration): MetadataChain = {
     val (qualified, fs) = resolve(root, conf)
     require(fs.isDirectory(new Path(qualified, "blocks")), s"no metadata chain at $root")
-    new MetadataChain(qualified, fs, conf)
+    new MetadataChain(qualified, fs)
   }
 
   def exists(root: Path, conf: Configuration): Boolean = {
@@ -432,6 +444,26 @@ object MetadataChain {
     exists(new Path(root.toUri), defaultConf)
 
   private def defaultConf: Configuration = new Configuration()
+
+  private def parse(json: String): MetadataBlock =
+    Serialization.read[MetadataBlock](json)(formats, manifest[MetadataBlock])
+
+  /** Reachable block lists by (qualified root, block hash), newest first.
+    * The lists of one chain share their tails, so an entry per head costs
+    * one cell. Bounded; the least recently used entry goes first. */
+  private object Walks {
+    private val MaxEntries = 256
+    private val lru =
+      new java.util.LinkedHashMap[(String, String), List[(MetadataBlock, String)]](64, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[(String, String), List[(MetadataBlock, String)]]): Boolean =
+          size > MaxEntries
+      }
+    def get(root: Path, hash: String): Option[List[(MetadataBlock, String)]] =
+      lru.synchronized(Option(lru.get((root.toString, hash))))
+    def put(root: Path, hash: String, blocks: List[(MetadataBlock, String)]): Unit =
+      lru.synchronized { lru.put((root.toString, hash), blocks); () }
+  }
 
   /** blocks/NNNNNN-<hash>.json -> (seq, hash) */
   private[graft] def parseName(p: Path): (Long, String) = {

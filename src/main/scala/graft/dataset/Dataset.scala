@@ -46,7 +46,12 @@ final class Dataset(val spark: SparkSession, val chain: MetadataChain) {
     * chain-level FILE pruning first: only slices overlapping the interval
     * are handed to the parquet reader, so a consumer that is nearly caught
     * up reads O(new data), not O(history). (Same mechanism as transform
-    * input slicing; exposed for rollup/index maintenance.) */
+    * input slicing; exposed for rollup/index maintenance.)
+    * Slices that lie wholly inside the interval need no row filter, since
+    * the chain records their offsets; a bound gets a filter only when a
+    * slice straddles it, so that slice's parquet row groups are still
+    * skipped. A steady-state read thus carries no per-call literal, and
+    * its generated code is reused from one call to the next. */
   def changesSince(prevOffset: Option[Long], upTo: Option[Long] = None): DataFrame = {
     val lo = prevOffset.map(_ + 1).getOrElse(0L)
     // `upTo` bounds the read at a head observed BEFORE the (lazy) delta
@@ -61,10 +66,10 @@ final class Dataset(val spark: SparkSession, val chain: MetadataChain) {
       val ddl = chain.schemaDdl()
       val reader = ddl.map(d => spark.read.schema(StructType.fromDDL(d))).getOrElse(spark.read)
       val off = org.apache.spark.sql.functions.col(vocabulary.offsetColumn)
-      val base = reader
-        .parquet(chain.slicePaths(slices): _*)
-        .filter(off >= lo)
-      upTo.fold(base)(hi => base.filter(off <= hi))
+      val bounds =
+        Option.when(slices.exists(_.offsetStart < lo))(off >= lo) ++
+          upTo.filter(hi => slices.exists(_.offsetEnd > hi)).map(off <= _)
+      bounds.foldLeft(reader.parquet(chain.slicePaths(slices): _*))(_.filter(_))
     }
   }
 

@@ -423,7 +423,11 @@ object IngestWriter {
    * empty input.
    * Physical hash = SHA-256 of the file bytes, streamed through the chain's
    * Hadoop FileSystem — fine to compute driver-side because slices are
-   * size-bounded. Staging happens in a SIBLING `staging/` dir (same
+   * size-bounded. It names these bytes, not the rows: the same rows written
+   * in another JVM hash differently, because the parquet writer lists each
+   * column chunk's encodings in the footer in the order of a `HashSet` of
+   * an enum, whose hash codes are identity hashes. The logical hash is the
+   * one that repeats. Staging happens in a SIBLING `staging/` dir (same
    * filesystem, so the final move is a rename — atomic on HDFS/posix, no
    * cross-store copy) and NEVER inside `data/`: the data dir is also a
    * Structured Streaming file source (StreamingOps.datasetStream), and a

@@ -291,16 +291,23 @@ object Maintenance {
     val fs = chain.fs
     val issues = Seq.newBuilder[Issue]
 
-    // chain link integrity: recompute each block's hash from its file
-    chain.blockFiles().foreach { f =>
+    // chain link integrity: recompute each block's hash from its file. The
+    // walk below may come from the chain's cache; a reachable block whose
+    // file is intact here holds exactly the cached bytes.
+    val onDisk = chain.blockFiles().map { f =>
       val name = f.getName.stripSuffix(".json")
       val declared = name.substring(name.indexOf('-') + 1)
       val actual = chain.sha256HexOf(f)
       if (actual != declared)
         issues += ChainIssue(s"block $name: content hash $actual != filename hash $declared")
+      declared
+    }.toSet
+    val walked = chain.blocksWithHashes()
+    walked.foreach { case (b, h) =>
+      if (!onDisk.contains(h)) issues += ChainIssue(s"block ${b.sequenceNumber} ($h): file missing")
     }
     // links and sequence numbers, over one walk of the chain
-    chain.blocksWithHashes().sliding(2).foreach {
+    walked.sliding(2).foreach {
       case Seq((a, aHash), (b, _)) =>
         if (!b.prevBlockHash.contains(aHash) || b.sequenceNumber != a.sequenceNumber + 1)
           issues += ChainIssue(

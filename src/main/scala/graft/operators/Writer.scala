@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.BoundConst
 import graft.model.DatasetVocabulary
 
 /**
@@ -37,8 +38,10 @@ object Writer {
   }
 
   /**
-   * Stamp `system_time` (literal commit time) and `event_time`
-   * (coalesce(existing, fallback)) columns (writer.rs:295-337).
+   * Stamp `system_time` (commit time) and `event_time`
+   * (coalesce(existing, fallback)) columns (writer.rs:295-337). Both times
+   * are [[BoundConst]]s, so a commit reuses the code the previous one
+   * compiled.
    */
   def stampSystemColumns(
       df: DataFrame,
@@ -46,8 +49,8 @@ object Writer {
       eventTimeFallback: Option[Timestamp] = None,
       vocab: DatasetVocabulary = DatasetVocabulary.Default
   ): DataFrame = {
-    val withSys = df.withColumn(vocab.systemTimeColumn, lit(systemTime))
-    val fallback: Column = lit(eventTimeFallback.getOrElse(systemTime))
+    val withSys = df.withColumn(vocab.systemTimeColumn, BoundConst.of(systemTime))
+    val fallback: Column = BoundConst.of(eventTimeFallback.getOrElse(systemTime))
     if (withSys.columns.contains(vocab.eventTimeColumn))
       withSys.withColumn(vocab.eventTimeColumn, coalesce(col(vocab.eventTimeColumn), fallback))
     else withSys.withColumn(vocab.eventTimeColumn, fallback)
@@ -58,7 +61,8 @@ object Writer {
    * into one partition, sorted there, and numbered by
    * `monotonically_increasing_id`, which in partition 0 is the row index.
    * Deterministic given a total sort order; the offset column is non-null by
-   * construction. Column order is normalized to
+   * construction; `startOffset` is a [[BoundConst]], like the stamped
+   * times. Column order is normalized to
    * `offset, op, system_time, event_time, <data>` (writer.rs:374-383).
    */
   def assignOffsets(
@@ -70,7 +74,8 @@ object Writer {
     val one = df.repartition(1)
     val sorted = if (sortOrder.nonEmpty) one.sortWithinPartitions(sortOrder: _*) else one
     normalizeColumnOrder(
-      sorted.withColumn(vocab.offsetColumn, lit(startOffset) + monotonically_increasing_id()),
+      sorted.withColumn(vocab.offsetColumn,
+        BoundConst.of(startOffset) + monotonically_increasing_id()),
       vocab)
   }
 

@@ -1,9 +1,10 @@
 package graft.chain
 
 import java.net.URI
+import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{DelegateToFileSystem, RawLocalFileSystem}
+import org.apache.hadoop.fs.{DelegateToFileSystem, FSDataInputStream, Path, RawLocalFileSystem}
 
 /**
  * A Hadoop `FileSystem` registered under its own `mock://` scheme, backed by
@@ -21,15 +22,25 @@ import org.apache.hadoop.fs.{DelegateToFileSystem, RawLocalFileSystem}
  * Raw (non-checksum) on purpose: object stores have no `.crc` sidecars, so
  * this also exercises the chain's own-integrity-hash reads without Hadoop's
  * checksum layer underneath.
+ *
+ * It counts the block files it opens, so a spec can see how many blocks a
+ * chain operation reads.
  */
 class MockFileSystem extends RawLocalFileSystem {
   override def getScheme: String = MockFileSystem.Scheme
   override def getUri: URI = MockFileSystem.NameUri
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    if (f.getParent.getName == "blocks") MockFileSystem.blockOpens.incrementAndGet()
+    super.open(f, bufferSize)
+  }
 }
 
 object MockFileSystem {
   val Scheme = "mock"
   val NameUri: URI = URI.create(s"$Scheme:///")
+
+  /** Block files opened through any `mock://` instance. */
+  val blockOpens = new AtomicLong
 
   /** Registers both bindings the chain needs: the `FileSystem` one (all
     * regular I/O + Spark scans) and the `AbstractFileSystem` one (the
@@ -41,7 +52,8 @@ object MockFileSystem {
 }
 
 /** `FileContext` binding for the `mock://` scheme — [[MetadataChain.setHead]]
-  * renames through `FileContext`, which resolves `AbstractFileSystem`
-  * implementations separately from `FileSystem` ones. */
+  * renames through `FileContext` on every scheme but `file://`, and
+  * `FileContext` resolves `AbstractFileSystem` implementations separately
+  * from `FileSystem` ones. */
 class MockAbstractFs(uri: URI, conf: Configuration)
     extends DelegateToFileSystem(uri, new MockFileSystem, conf, MockFileSystem.Scheme, false)

@@ -2,10 +2,13 @@ package graft.chain
 
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.Path
+
 import graft.SparkSpec
 import graft.dataset.Dataset
 import graft.ingest.IngestWriter
 import graft.maintenance.Maintenance
+import graft.model.MetadataEvent.SetAttachments
 import graft.operators.MergeStrategy
 
 /** End-to-end dataset lifecycle on a NON-default FileSystem scheme — the
@@ -56,5 +59,43 @@ class MockFsSpec extends SparkSpec {
     Files.write(sliceLocal, Files.readAllBytes(sliceLocal) ++ Array[Byte](0))
     val issues = Maintenance.verify(compacted)
     assert(issues.exists(_.msg.contains("physical hash mismatch")), issues.mkString("; "))
+  }
+
+  test("block files opened per commit are the same at 20 and at 200 blocks") {
+    MockFileSystem.register(spark.sparkContext.hadoopConfiguration)
+    val local = Files.createTempDirectory("graft-mockfs-opens-")
+    def rows(id: Long) = Seq((id, "a")).toDF("id", "v")
+    def opens(body: => Unit): Long = {
+      val before = MockFileSystem.blockOpens.get
+      body
+      MockFileSystem.blockOpens.get - before
+    }
+    /** Block opens of a commit right after another process appended one
+      * block, and of the commit after it, on a chain of `blocks` blocks. */
+    def opensPerCommit(blocks: Int): (Long, Long) = {
+      val dir = local.resolve(s"ds$blocks")
+      val ds = Dataset.createAt(spark, s"mock://$dir", s"opens$blocks")
+      IngestWriter.writeBatch(ds, rows(0L), MergeStrategy.Append(), 1000L)
+      var prev = ds.chain.head
+      while (prev.get._1 < blocks - 2) {
+        val (b, h) = ds.chain.writeDetachedBlock(prev, SetAttachments(Nil), 2000L)
+        prev = Some((b.sequenceNumber, h))
+      }
+      ds.chain.setHead(prev.get._1, prev.get._2)
+      // the other process: the same directory under a second name, whose
+      // walks this JVM keeps apart from `ds`'s
+      val alias = Files.createSymbolicLink(local.resolve(s"alias$blocks"), dir)
+      MetadataChain.open(new Path(s"mock://$alias"), spark.sparkContext.hadoopConfiguration)
+        .append(SetAttachments(Nil), 3000L)
+      val afterForeign = opens(IngestWriter.writeBatch(ds, rows(1L), MergeStrategy.Append(), 4000L))
+      val steady = opens(IngestWriter.writeBatch(ds, rows(2L), MergeStrategy.Append(), 5000L))
+      assert(ds.chain.head.get._1 === blocks + 1L)
+      assert(ds.toDF().count() === 3L)
+      (afterForeign, steady)
+    }
+    val at20 = opensPerCommit(20)
+    assert(at20 === opensPerCommit(200))
+    // the walk reads the one block it has not seen, back to a cached head
+    assert(at20 === ((1L, 0L)))
   }
 }

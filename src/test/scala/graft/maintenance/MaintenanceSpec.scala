@@ -177,6 +177,27 @@ class MaintenanceSpec extends SparkSpec {
     assert(issues.exists(_.msg.contains("content hash")), issues.mkString("; "))
   }
 
+  test("verify: a block tampered after the chain was read and cached is one chain issue") {
+    val ds = mkDataset(slices = 2, rowsPerSlice = 3)
+    val cached = ds.chain.blocksWithHashes()
+    val blockFile = java.nio.file.Paths.get(ds.chain.blockFiles().head.toUri)
+    Files.writeString(blockFile, Files.readString(blockFile).replace("\"m\"", "\"x\""))
+    assert(ds.chain.blocksWithHashes() === cached) // the walk still serves the cached blocks
+    val issues = Maintenance.verify(ds)
+    assert(issues.size === 1, issues.mkString("; "))
+    assert(issues.head.isInstanceOf[Maintenance.ChainIssue] && issues.head.msg.contains("content hash"),
+      issues.head)
+  }
+
+  test("verify: a reachable block file deleted after the chain was cached is reported") {
+    val ds = mkDataset(slices = 1, rowsPerSlice = 3)
+    ds.chain.blocksWithHashes()
+    val (seq, head) = ds.chain.head.get
+    val victim = ds.chain.blockFiles().find(_.getName.contains(head)).get
+    ds.chain.fs.delete(victim, false)
+    assert(Maintenance.verify(ds) === Seq(Maintenance.ChainIssue(s"block $seq ($head): file missing")))
+  }
+
   test("verifyTransform replays the recorded intervals and matches hashes") {
     val work = Files.createTempDirectory("graft-vt-")
     Files.writeString(work.resolve("r1.csv"), "city,population\na,1\nb,2\n")
