@@ -181,25 +181,19 @@ final class RestServer(
   /** Checkpoint file paths arrive from the network (URI.getPath / getQuery —
     * both decoded exactly ONCE by java.net.URI; nothing here decodes again,
     * so double-encoded traversal like %252e%252e stays inert as literal
-    * "%2e%2e"). A name/path is usable only if every `/`-separated segment is
-    * non-empty and free of `.`/`..`, it is relative, and it carries no
-    * backslash or `:` (Hadoop Path treats `C:`/`scheme:` children as
-    * absolute, discarding the parent). Returns the resolved path and
-    * re-checks containment under `base` on the normalized URI as a final
+    * "%2e%2e"). A name/path is usable only if it passes
+    * [[graft.chain.MetadataChain.isSafeRelPath]]. Returns the resolved path
+    * and re-checks containment under `base` on the normalized URI as a final
     * guard. */
   private def resolveUnder(
       base: org.apache.hadoop.fs.Path,
-      rel: String): Option[org.apache.hadoop.fs.Path] = {
-    def segs(s: String): Option[Seq[String]] =
-      if (s.isEmpty || s.startsWith("/") || s.contains("\\") || s.contains(":")) None
-      else Some(s.split("/", -1).toSeq).filter(
-        _.forall(seg => seg.nonEmpty && seg != "." && seg != ".."))
-    segs(rel).map(_.foldLeft(base)(new org.apache.hadoop.fs.Path(_, _))).filter {
-      resolved =>
+      rel: String): Option[org.apache.hadoop.fs.Path] =
+    Some(rel).filter(graft.chain.MetadataChain.isSafeRelPath)
+      .map(_.split("/").foldLeft(base)(new org.apache.hadoop.fs.Path(_, _)))
+      .filter { resolved =>
         val basePath = base.toUri.normalize.getPath.stripSuffix("/")
         resolved.toUri.normalize.getPath.startsWith(basePath + "/")
-    }
-  }
+      }
 
   /** URL-decoded query options (OData options carry spaces and quotes). */
   private def queryOptions(ex: HttpExchange): Map[String, String] =
@@ -344,17 +338,8 @@ final class RestServer(
         val chain = chainForPush(name).getOrElse(
           return json(404, s"""{"error":"unknown dataset $name"}"""))
         val bytes = ex.getRequestBody.readAllBytes()
-        val (seq, hash) = graft.chain.MetadataChain.parseName(
-          new org.apache.hadoop.fs.Path(blockFile))
-        val got = graft.chain.MetadataChain.sha256Hex(bytes)
-        if (got != hash)
-          return json(400, s"""{"error":"block body hashes to $got, not its address $hash"}""")
-        // must parse as a block whose declared sequence matches its name
-        val block = org.json4s.jackson.Serialization.read[graft.model.MetadataBlock](
-          new String(bytes, StandardCharsets.UTF_8))(
-          graft.chain.MetadataChain.formats, manifest[graft.model.MetadataBlock])
-        if (block.sequenceNumber != seq)
-          return json(400, s"""{"error":"block declares seq ${block.sequenceNumber} but is named $seq"}""")
+        // a refused block throws, which answers 400
+        graft.chain.MetadataChain.acceptBlock(blockFile, bytes)
         chain.writeObjectAtomic(
           new org.apache.hadoop.fs.Path(chain.blocksDir, blockFile), bytes)
         json(200, """{"received":true}""")
@@ -383,7 +368,8 @@ final class RestServer(
         // directory — after a forced push the directory still holds the
         // abandoned branch's files, which are garbage, not history
         json(200, ds.chain.blocksWithHashes()
-          .map { case (b, h) => jstr(f"${b.sequenceNumber}%06d-$h.json") }
+          .map { case (b, h) =>
+            jstr(graft.chain.MetadataChain.blockFileName(b.sequenceNumber, h)) }
           .mkString("[", ",", "]"))
       case Array("datasets", name, "sync", "blocks", blockFile) =>
         serveChainFile(name, c => new org.apache.hadoop.fs.Path(c.blocksDir, blockFile))
@@ -461,9 +447,10 @@ final class RestServer(
   /** Validated head move shared by the HTTP push surface and the smart
     * transfer protocol's push-complete phase ([[graft.sync.SmartTransferServer]]):
     * the proposed head must name a complete linked chain whose referenced
-    * data objects are all staged; `basedOn` is the optimistic-concurrency
-    * base ("" = planned against an empty chain, None = skip the CAS check);
-    * non-fast-forward moves need `force`. */
+    * data slices and checkpoint directories
+    * ([[graft.chain.MetadataChain.objectsOf]]) are all staged; `basedOn` is
+    * the optimistic-concurrency base ("" = planned against an empty chain,
+    * None = skip the CAS check); non-fast-forward moves need `force`. */
   private[graft] def syncCommitHead(
       name: String, seq: Long, hash: String,
       basedOn: Option[String], force: Boolean): Either[(Int, String), Unit] = {
@@ -475,14 +462,15 @@ final class RestServer(
       return Left(400 -> s"head $hash has seq ${newChain.last._1.sequenceNumber}, not $seq")
     // every object the new chain references must already be staged
     val unstaged = newChain.flatMap { case (b, h) =>
-      (b.event match {
-        case a: graft.model.MetadataEvent.AddData => Seq(a.physicalHash)
-        case e: graft.model.MetadataEvent.ExecuteTransform => e.newData.map(_.physicalHash).toSeq
-        case _ => Nil
-      }).filterNot(ph => chain.fs.exists(chain.dataFile(ph))).map(ph => s"$h->$ph")
+      val (data, ckpt) = graft.chain.MetadataChain.objectsOf(b.event)
+      data.map(_.physicalHash).filterNot(ph => chain.fs.exists(chain.dataFile(ph)))
+        .map(ph => s"$h->slice $ph") ++
+        ckpt.map(_.name)
+          .filterNot(n => resolveUnder(chain.checkpointsDir, n).exists(chain.fs.exists))
+          .map(n => s"$h->checkpoint $n")
     }
     if (unstaged.nonEmpty)
-      return Left(400 -> s"unstaged slice(s): ${unstaged.mkString(",")}")
+      return Left(400 -> s"unstaged object(s): ${unstaged.mkString(",")}")
     // optimistic concurrency: the client states which head its plan was
     // based on ("prev": hash, or "" when it saw an empty chain); if another
     // push moved the head since, reject instead of silently absorbing —

@@ -73,14 +73,15 @@ final class MetadataChain private (val root: Path, val fs: FileSystem) {
     finally out.close()
   }
 
-  /** Block files currently on disk, sorted by name (reachable or not). */
+  /** Block files currently on disk, sorted by name (reachable or not);
+    * a file whose name is not a [[blockFileName]] is not a block. */
   def blockFiles(): Seq[Path] =
     if (!fs.exists(blocksDir)) Nil
     else
       fs.listStatus(blocksDir)
         .toSeq
         .map(_.getPath)
-        .filter(_.getName.endsWith(".json"))
+        .filter(p => parseBlockName(p.getName).isDefined)
         .sortBy(_.getName)
 
   /** (sequenceNumber, blockHash) of the head, if any block exists. */
@@ -97,7 +98,7 @@ final class MetadataChain private (val root: Path, val fs: FileSystem) {
     * abandoned by a reset — are simply unreachable rather than corrupting
     * reads. */
   private def blockFilesByHash(): Map[String, Path] =
-    blockFiles().map(p => parseName(p)._2 -> p).toMap
+    blockFiles().map(p => parseBlockName(p.getName).get._2 -> p).toMap
 
   /** All blocks in sequence order (optionally only up to `asOfHash`),
     * resolved by walking prev links back from the head (or `asOfHash`). */
@@ -151,7 +152,7 @@ final class MetadataChain private (val root: Path, val fs: FileSystem) {
     val json = Serialization.write(block)(formats)
     val hash = sha256Hex(json.getBytes(StandardCharsets.UTF_8))
     fs.mkdirs(blocksDir)
-    writeString(new Path(blocksDir, f"${block.sequenceNumber}%06d-$hash.json"), json)
+    writeString(new Path(blocksDir, blockFileName(block.sequenceNumber, hash)), json)
     // The walk from the new block is its parent's plus the block, as a
     // read of the file would give it.
     prev.fold(Option(List.empty[(MetadataBlock, String)]))(p => Walks.get(root, p._2))
@@ -317,13 +318,9 @@ final class MetadataChain private (val root: Path, val fs: FileSystem) {
       .getOrElse(Nil)
 
   /** All data-bearing slices in chain order (AddData + ExecuteTransform
-    * events). An AddData with no physical file (ODF's `new_data: None` form,
-    * produced by set-watermark) carries metadata only and is not a slice. */
+    * events, see [[MetadataChain.objectsOf]]). */
   def slices(asOf: Option[String] = None): Seq[AddData] =
-    blocks(asOf).collect {
-      case MetadataBlock(_, _, _, a: AddData) if a.physicalHash.nonEmpty   => a
-      case MetadataBlock(_, _, _, ExecuteTransform(_, Some(newData), _)) => newData
-    }
+    blocks(asOf).flatMap(b => objectsOf(b.event)._1)
 
   /** Head-backwards slice selection until `lastRecords` records are covered —
     * the record-limit file pruning of kamu_table.rs:230-295. */
@@ -445,7 +442,7 @@ object MetadataChain {
 
   private def defaultConf: Configuration = new Configuration()
 
-  private def parse(json: String): MetadataBlock =
+  private[graft] def parse(json: String): MetadataBlock =
     Serialization.read[MetadataBlock](json)(formats, manifest[MetadataBlock])
 
   /** Reachable block lists by (qualified root, block hash), newest first.
@@ -465,18 +462,75 @@ object MetadataChain {
       lru.synchronized { lru.put((root.toString, hash), blocks); () }
   }
 
-  /** blocks/NNNNNN-<hash>.json -> (seq, hash) */
-  private[graft] def parseName(p: Path): (Long, String) = {
-    val name = p.getName.stripSuffix(".json")
-    val dash = name.indexOf('-')
-    (name.substring(0, dash).toLong, name.substring(dash + 1))
+  /** `blocks/` file name of the block with sequence number `seq` and hash
+    * `hash`: `NNNNNN-<sha256>.json`. */
+  private[graft] def blockFileName(seq: Long, hash: String): String = f"$seq%06d-$hash.json"
+
+  private val BlockName = """(\d{6,})-([0-9a-f]{64})\.json""".r
+
+  /** (seq, hash) of a [[blockFileName]]; None for anything else, so a name
+    * that parses is one path segment and cannot point outside `blocks/`. */
+  private[graft] def parseBlockName(name: String): Option[(Long, String)] = name match {
+    case BlockName(seq, hash) => Some((seq.toLong, hash))
+    case _                    => None
   }
+
+  /** The objects a block's event references: its data slice and its engine
+    * checkpoint. An AddData with no physical file (ODF's `new_data: None`
+    * form, produced by set-watermark) carries metadata only and references
+    * no slice. Every reader of the referenced objects — `slices`, gc and
+    * each sync path — goes through this one match. */
+  private[graft] def objectsOf(event: MetadataEvent): (Option[AddData], Option[CheckpointRef]) =
+    event match {
+      case a: AddData          => (Some(a).filter(_.physicalHash.nonEmpty), None)
+      case e: ExecuteTransform => (e.newData, e.newCheckpoint)
+      case _                   => (None, None)
+    }
+
+  /** Accept one block file from an untrusted peer: its name must be a
+    * [[blockFileName]], its bytes must hash to the name's hash, they must
+    * decode as a block, and the block must declare the name's sequence
+    * number. Returns the block and its hash. */
+  private[graft] def acceptBlock(name: String, bytes: Array[Byte]): (MetadataBlock, String) = {
+    val (seq, hash) = parseBlockName(name).getOrElse(
+      throw new IllegalArgumentException(s"'$name' is not a valid block name"))
+    val got = sha256Hex(bytes)
+    require(got == hash, s"block $name fails its content address (hashes to $got)")
+    val block = parse(new String(bytes, StandardCharsets.UTF_8))
+    require(block.sequenceNumber == seq,
+      s"block $name declares seq ${block.sequenceNumber} but is named $seq")
+    (block, hash)
+  }
+
+  /** Require `delta` (oldest first) to continue the chain whose head is
+    * `head` (None: an empty chain): consecutive sequence numbers, each block
+    * prev-linked to the one before. A content address proves a block's
+    * bytes, not its place, so a receiver checks this before it moves a
+    * head over blocks from a peer. */
+  private[graft] def requireLinked(
+      head: Option[(Long, String)],
+      delta: Seq[(MetadataBlock, String)]
+  ): Unit =
+    delta.foldLeft(head) { case (prev, (b, h)) =>
+      val expectSeq = prev.fold(0L)(_._1 + 1)
+      require(b.sequenceNumber == expectSeq,
+        s"block $h has seq ${b.sequenceNumber}, chain expects $expectSeq")
+      require(b.prevBlockHash == prev.map(_._2),
+        s"block $h prev-links to ${b.prevBlockHash}, chain expects ${prev.map(_._2)}")
+      Some((b.sequenceNumber, h))
+    }
+
+  /** A relative path that stays under the directory it is joined to: not
+    * empty, not absolute, no `.`/`..`/empty segment, no backslash and no
+    * `:` (Hadoop `Path` treats a `scheme:` or `C:` child as absolute and
+    * drops the parent). Checkpoint names, checkpoint file paths and bundle
+    * entries from a peer all pass through it. */
+  private[graft] def isSafeRelPath(s: String): Boolean =
+    s.nonEmpty && !s.startsWith("/") && !s.contains("\\") && !s.contains(":") &&
+      s.split("/", -1).forall(seg => seg.nonEmpty && seg != "." && seg != "..")
 
   def sha256Hex(bytes: Array[Byte]): String =
     MessageDigest.getInstance("SHA-256").digest(bytes).map("%02x".format(_)).mkString
-
-  def sha256HexOfFile(p: java.nio.file.Path): String =
-    sha256Hex(java.nio.file.Files.readAllBytes(p))
 
   /** SHA-256 streamed through a Hadoop FileSystem (no local materialize). */
   def sha256HexOf(fs: FileSystem, p: Path): String = {

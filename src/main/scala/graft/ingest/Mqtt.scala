@@ -115,8 +115,6 @@ object Mqtt {
     Packet(h >> 4, h & 0x0F, body)
   }
 
-  def parsePublish(p: Packet): Message = parsePublishWithId(p)._1
-
   /** PUBLISH → (message, packetId); the id is present only for QoS > 0. */
   def parsePublishWithId(p: Packet): (Message, Option[Int]) = {
     val tlen = ((p.body(0) & 0xFF) << 8) | (p.body(1) & 0xFF)

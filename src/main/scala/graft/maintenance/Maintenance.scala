@@ -248,7 +248,7 @@ object Maintenance {
     // unreachable blocks
     val reachable = chain.blocksWithHashes().map(_._2).toSet
     val unreachableBlocks = chain.blockFiles()
-      .filterNot(p => reachable.contains(MetadataChain.parseName(p)._2))
+      .filterNot(p => MetadataChain.parseBlockName(p.getName).exists(n => reachable(n._2)))
     unreachableBlocks.foreach { p => bytes += len(p); fs.delete(p, false) }
     // data files no reachable slice references
     val referenced = chain.slices().map(_.physicalHash).toSet
@@ -258,9 +258,8 @@ object Maintenance {
         .filterNot(p => referenced.contains(p.getName))
     orphanData.foreach { p => bytes += len(p); fs.delete(p, false) }
     // checkpoint dirs no reachable ExecuteTransform references
-    val referencedCkpts = chain.blocks().collect {
-      case MetadataBlock(_, _, _, ExecuteTransform(_, _, Some(ck))) => ck.name
-    }.toSet
+    val referencedCkpts =
+      chain.blocks().flatMap(b => MetadataChain.objectsOf(b.event)._2).map(_.name).toSet
     val orphanCkpts =
       if (!fs.exists(chain.checkpointsDir)) Seq.empty
       else fs.listStatus(chain.checkpointsDir).toSeq.map(_.getPath)
@@ -296,7 +295,7 @@ object Maintenance {
     // file is intact here holds exactly the cached bytes.
     val onDisk = chain.blockFiles().map { f =>
       val name = f.getName.stripSuffix(".json")
-      val declared = name.substring(name.indexOf('-') + 1)
+      val declared = MetadataChain.parseBlockName(f.getName).get._2
       val actual = chain.sha256HexOf(f)
       if (actual != declared)
         issues += ChainIssue(s"block $name: content hash $actual != filename hash $declared")

@@ -30,19 +30,14 @@ object Export {
   /**
    * Training-shard sink: one `shard=N/` directory per value of `shardCol`
    * (the output of [[Corpus.packShards]]), each holding a single ndjson
-   * (or parquet) file — the layout a training loader streams shard by
-   * shard. The repartition ON the shard column routes each shard through
-   * one task, so a shard is one file, not `spark.sql.shuffle.partitions`
-   * fragments; distinct shards still write in parallel across tasks.
+   * file — the layout a training loader streams shard by shard. The
+   * repartition ON the shard column routes each shard through one task, so
+   * a shard is one file, not `spark.sql.shuffle.partitions` fragments;
+   * distinct shards still write in parallel across tasks.
    */
   def toShardedNdjson(df: DataFrame, shardCol: String, path: String): Unit =
     df.repartition(org.apache.spark.sql.functions.col(shardCol))
       .write.mode("overwrite").partitionBy(shardCol).json(path)
-
-  /** Parquet form of [[toShardedNdjson]] (same layout, columnar files). */
-  def toShardedParquet(df: DataFrame, shardCol: String, path: String): Unit =
-    df.repartition(org.apache.spark.sql.functions.col(shardCol))
-      .write.mode("overwrite").partitionBy(shardCol).parquet(path)
 
   private def shaped(df: DataFrame, n: Option[Int]): DataFrame =
     n.map(df.coalesce).getOrElse(df)
@@ -59,8 +54,8 @@ object Export {
    * shard's rows arrive contiguously in document order, so the task streams
    * ids through a buffered writer — O(buffer) memory regardless of shard
    * size. Files land via write-temp-then-rename, so a retried task
-   * overwrites its own output idempotently. (The ndjson/parquet shard sinks
-   * above are the record-oriented variants; this is the packed-token one.)
+   * overwrites its own output idempotently. (The ndjson shard sink above is
+   * the record-oriented variant; this is the packed-token one.)
    */
   def toTokenBinShards(
       df: DataFrame,

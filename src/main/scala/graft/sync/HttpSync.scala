@@ -8,7 +8,6 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
 import graft.chain.MetadataChain
-import graft.model.MetadataEvent.{AddData, ExecuteTransform}
 
 /**
  * Pull/push a dataset from/to a SERVED graft node (the
@@ -23,7 +22,9 @@ import graft.model.MetadataEvent.{AddData, ExecuteTransform}
  * via write-temp + rename (an existing file is therefore complete and
  * skippable — natural resume), every transferred object is hash-verified
  * (an HTTP remote is never a trusted source), and the head ref moves only
- * after everything is in place. Push adds a batched negotiation round
+ * after everything is in place. A pulled block passes
+ * [[MetadataChain.acceptBlock]] and the delta [[MetadataChain.requireLinked]]
+ * before anything lands. Push adds a batched negotiation round
  * (`POST sync/missing`, git-style) so a resumed push re-sends only what the
  * server still lacks.
  */
@@ -50,33 +51,26 @@ object HttpSync {
     resp.body()
   }
 
-  private val BlockNamePattern = """\d{6,}-[0-9a-f]{64}\.json""".r
-
-  /** Block file names from the listing endpoint, seq-sorted. The listing is
-    * UNTRUSTED input that later lands in `Path(blocksDir, name)` — anything
-    * but the strict `NNNNNN-<sha256>.json` shape (one path segment, no
-    * separators) is rejected before it can name a file elsewhere. */
-  private def blockNames(client: HttpClient, base: String): Seq[String] = {
+  /** (seq, hash) of each block in the listing endpoint's answer, in seq
+    * order. The listing is UNTRUSTED input whose names later land under
+    * `blocks/`: an entry that is not a [[MetadataChain.blockFileName]] is
+    * rejected before it can name a file elsewhere. */
+  private def listBlocks(client: HttpClient, base: String): Seq[(Long, String)] = {
     implicit val formats: org.json4s.DefaultFormats.type = org.json4s.DefaultFormats
-    val names = org.json4s.jackson.Serialization
+    org.json4s.jackson.Serialization
       .read[Seq[String]](new String(get(client, s"$base/sync/blocks"), UTF_8))
-      .sorted
-    names.foreach(n => require(BlockNamePattern.matches(n),
-      s"remote block listing entry '$n' is not a valid block name"))
-    names
+      .map(n => MetadataChain.parseBlockName(n).getOrElse(throw new IllegalArgumentException(
+        s"remote block listing entry '$n' is not a valid block name")))
+      .sortBy(_._1)
   }
 
-  /** Validate a path from an UNTRUSTED remote (checkpoint names out of block
-    * events, file paths out of the checkpoint listing) before it is joined
-    * under a local directory: must be relative, free of `.`/`..`/empty
-    * segments, and carry no backslash or scheme/drive colon (Hadoop Path
-    * treats `scheme:`/`C:` children as absolute, discarding the parent).
-    * Mirrors RestServer.resolveUnder on the serving side. */
-  private def requireSafeRel(kind: String, s: String): Unit =
-    require(
-      s.nonEmpty && !s.startsWith("/") && !s.contains("\\") && !s.contains(":") &&
-        s.split("/", -1).forall(seg => seg.nonEmpty && seg != "." && seg != ".."),
-      s"$kind '$s' from remote is not a safe relative path")
+  /** A path from the UNTRUSTED remote, checked with
+    * [[MetadataChain.isSafeRelPath]] before it is joined under a local
+    * directory. */
+  private def safeRel(kind: String, s: String): String = {
+    require(MetadataChain.isSafeRelPath(s), s"$kind '$s' from remote is not a safe relative path")
+    s
+  }
 
   /** Compare the LOCAL chain against a served one without transferring
     * anything (block hashes come from the content-addressed names) — same
@@ -90,8 +84,7 @@ object HttpSync {
       client: HttpClient = HttpClient.newHttpClient()
   ): SyncService.ChainsStatus = {
     val base = s"${baseUrl.stripSuffix("/")}/datasets/$dataset"
-    val remoteHashes = blockNames(client, base).map(n =>
-      MetadataChain.parseName(new Path(n))._2)
+    val remoteHashes = listBlocks(client, base).map(_._2)
     val local =
       if (MetadataChain.exists(localRoot, conf))
         MetadataChain.open(localRoot, conf).blocksWithHashes()
@@ -116,14 +109,13 @@ object HttpSync {
       parallelism: Int = 8
   ): SyncService.SyncResult = {
     val base = s"${baseUrl.stripSuffix("/")}/datasets/$dataset"
-    val names = blockNames(client, base)
-    require(names.nonEmpty, s"remote dataset $dataset has no blocks")
-    val remote = names.map(n => MetadataChain.parseName(new Path(n)))
+    val remote = listBlocks(client, base)
+    require(remote.nonEmpty, s"remote dataset $dataset has no blocks")
 
-    // Listing-shape validation FIRST (UNTRUSTED remote): reject a gapped or
-    // shuffled chain before a single block body is fetched — on a large
-    // chain that is thousands of saved requests (the per-block declared-seq
-    // and prev-hash checks below still need the bodies).
+    // Listing-shape validation FIRST (UNTRUSTED remote): reject a gapped
+    // chain before a single block body is fetched — on a large chain that is
+    // thousands of saved requests (the per-block declared-seq and prev-hash
+    // checks below still need the bodies).
     require(remote.map(_._1) == remote.indices.map(_.toLong),
       s"remote listing is not a contiguous chain: seqs ${remote.map(_._1).mkString(",")}")
 
@@ -157,56 +149,31 @@ object HttpSync {
     // validated; (3) data slices + checkpoint files on a bounded pool;
     // (4) block files land only after every referenced object — same
     // objects-first/blocks-last/head-last ordering as SyncService.sync.
-    val pending = names.drop(common)
-    val blockBytes: Seq[(String, Array[Byte])] =
-      SyncService.inParallel(parallelism, pending.map { blockName => () =>
-        val (_, hash) = MetadataChain.parseName(new Path(blockName))
-        val bytes =
-          if (have.contains(blockName)) {
-            val in = local.fs.open(new Path(local.blocksDir, blockName))
-            try in.readAllBytes() finally in.close()
-          } else get(client, s"$base/sync/blocks/$blockName")
-        require(MetadataChain.sha256Hex(bytes) == hash,
-          s"remote block $blockName fails its content address")
-        blockName -> bytes
-      })
-
-    val parsedBlocks = blockBytes.map { case (_, bytes) =>
-      org.json4s.jackson.Serialization
-        .read[graft.model.MetadataBlock](new String(bytes, UTF_8))(
-          MetadataChain.formats, manifest[graft.model.MetadataBlock])
-    }
-    // Chain-linkage validation (UNTRUSTED remote): content addresses prove
-    // each block's BYTES, not their order — before any commit, the delta
-    // must be the contiguous prev-hash-linked continuation of the committed
-    // prefix (listing contiguity was already enforced pre-fetch above), or
-    // setHead below would corrupt the local chain.
-    parsedBlocks.zipWithIndex.foreach { case (b, i) =>
-      val at = common + i
-      require(b.sequenceNumber == remote(at)._1,
-        s"remote block ${pending(i)} declares seq ${b.sequenceNumber}, listed as ${remote(at)._1}")
-      val expectPrev = if (at == 0) None else Some(remote(at - 1)._2)
-      require(b.prevBlockHash == expectPrev,
-        s"remote block ${pending(i)} prev-links to ${b.prevBlockHash}, chain expects $expectPrev")
-    }
-    val parsedEvents = parsedBlocks.map(_.event)
-    val dataRefs = parsedEvents.flatMap {
-      case a: AddData          => Seq(a.physicalHash)
-      case e: ExecuteTransform => e.newData.map(_.physicalHash).toSeq
-      case _                   => Nil
-    }.distinct.filterNot(ph => local.fs.exists(local.dataFile(ph)))
-    val ckptRefs = parsedEvents.flatMap {
-      case e: ExecuteTransform => e.newCheckpoint.map(_.name).toSeq
-      case _                   => Nil
-    }.distinct
+    val pending = remote.drop(common).map { case (seq, h) => MetadataChain.blockFileName(seq, h) }
+    val blocks = SyncService.inParallel(parallelism, pending.map { blockName => () =>
+      val bytes =
+        if (have.contains(blockName)) {
+          val in = local.fs.open(new Path(local.blocksDir, blockName))
+          try in.readAllBytes() finally in.close()
+        } else get(client, s"$base/sync/blocks/$blockName")
+      (blockName, bytes, MetadataChain.acceptBlock(blockName, bytes))
+    })
+    // content addresses prove each block's BYTES, not their order: before
+    // any commit the delta must continue the committed prefix, or setHead
+    // below would corrupt the local chain
+    MetadataChain.requireLinked(
+      if (common == 0) None else Some(remote(common - 1)), blocks.map(_._3))
+    val objects = blocks.map(b => MetadataChain.objectsOf(b._3._1.event))
+    val dataRefs = objects.flatMap(_._1).map(_.physicalHash).distinct
+      .filterNot(ph => local.fs.exists(local.dataFile(ph)))
+    val ckptRefs = objects.flatMap(_._2).map(_.name).distinct
     val ckptFiles: Seq[(String, String)] = ckptRefs.flatMap { ckpt =>
-      requireSafeRel("checkpoint name", ckpt)
-      require(!ckpt.contains("/"), s"checkpoint name '$ckpt' is not a single segment")
+      require(!safeRel("checkpoint name", ckpt).contains("/"),
+        s"checkpoint name '$ckpt' is not a single segment")
       implicit val formats: org.json4s.DefaultFormats.type = org.json4s.DefaultFormats
       val rels = org.json4s.jackson.Serialization.read[Seq[String]](
         new String(get(client, s"$base/sync/checkpoints/$ckpt"), UTF_8))
-      rels.foreach(requireSafeRel("checkpoint file path", _))
-      rels.map(ckpt -> _)
+      rels.map(rel => ckpt -> safeRel("checkpoint file path", rel))
     }.filterNot { case (ckpt, rel) =>
       local.fs.exists(new Path(new Path(local.checkpointsDir, ckpt), rel))
     }
@@ -228,18 +195,15 @@ object HttpSync {
     SyncService.inParallel(parallelism, sliceFetches ++ ckptFetches)
     val dataCopied = dataRefs.size
 
-    blockBytes.foreach { case (blockName, bytes) =>
+    blocks.foreach { case (blockName, bytes, _) =>
       if (!have.contains(blockName))
-        writeViaStaging(local, new Path(local.blocksDir, blockName), bytes)
+        local.writeObjectAtomic(new Path(local.blocksDir, blockName), bytes)
     }
 
     val (lastSeq, lastHash) = remote.last
     local.setHead(lastSeq, lastHash)
     SyncService.Updated(oldHead.map(_._2), lastHash, remote.size - common, dataCopied)
   }
-
-  private def writeViaStaging(chain: MetadataChain, target: Path, bytes: Array[Byte]): Unit =
-    chain.writeObjectAtomic(target, bytes)
 
   // ------------------------------------------------------------------ push
 
@@ -290,14 +254,13 @@ object HttpSync {
     val srcBlocks = local.blocksWithHashes()
     require(srcBlocks.nonEmpty, s"local dataset at $localRoot has no blocks to push")
 
-    val remoteNames =
-      try blockNames(client, base)
+    val remoteHashes =
+      try listBlocks(client, base).map(_._2)
       catch {
         case _: IllegalArgumentException =>
           sendOk(client, "POST", s"$base/sync/create", Array.emptyByteArray)
           Nil
       }
-    val remoteHashes = remoteNames.map(n => MetadataChain.parseName(new Path(n))._2)
 
     val status = SyncService.compareHashes(srcBlocks, remoteHashes)
     val toTransfer: Seq[(graft.model.MetadataBlock, String)] = status match {
@@ -312,14 +275,10 @@ object HttpSync {
     }
 
     // one negotiation round for the whole plan
-    val planBlocks = toTransfer.map { case (b, h) => f"${b.sequenceNumber}%06d-$h.json" }
-    val planData = toTransfer.flatMap { case (b, _) =>
-      b.event match {
-        case a: AddData          => Seq(a.physicalHash)
-        case e: ExecuteTransform => e.newData.map(_.physicalHash).toSeq
-        case _                   => Nil
-      }
-    }.distinct
+    val planBlocks =
+      toTransfer.map { case (b, h) => MetadataChain.blockFileName(b.sequenceNumber, h) }
+    val objects = toTransfer.map(b => MetadataChain.objectsOf(b._1.event))
+    val planData = objects.flatMap(_._1).map(_.physicalHash).distinct
     implicit val formats: org.json4s.DefaultFormats.type = org.json4s.DefaultFormats
     val negotiation = org.json4s.jackson.JsonMethods.parse(new String(
       send(client, "POST", s"$base/sync/missing",
@@ -338,21 +297,14 @@ object HttpSync {
     // bounded pool; the head POST below stays the single commit point.
     val pushSlices: Seq[() => Unit] = planData.filter(needData.contains)
       .map(ph => () => pushSlice(client, base, local, ph))
-    val pushCkptFiles: Seq[() => Unit] = toTransfer.flatMap { case (b, _) =>
-      b.event match {
-        case e: ExecuteTransform => e.newCheckpoint.map(_.name).toSeq
-        case _                   => Nil
+    val pushCkptFiles: Seq[() => Unit] = objects.flatMap(_._2).map(_.name).distinct
+      .flatMap(ckpt => checkpointFilePushes(client, base, local, ckpt))
+    val pushBlocks: Seq[() => Unit] = planBlocks.filter(needBlocks.contains).map { blockName =>
+      () => {
+        val in = local.fs.open(new Path(local.blocksDir, blockName))
+        val bytes = try in.readAllBytes() finally in.close()
+        sendOk(client, "PUT", s"$base/sync/blocks/$blockName", bytes)
       }
-    }.distinct.flatMap(ckpt => checkpointFilePushes(client, base, local, ckpt))
-    val pushBlocks: Seq[() => Unit] = toTransfer.collect {
-      case (block, hash)
-          if needBlocks.contains(f"${block.sequenceNumber}%06d-$hash.json") =>
-        () => {
-          val blockName = f"${block.sequenceNumber}%06d-$hash.json"
-          val in = local.fs.open(new Path(local.blocksDir, blockName))
-          val bytes = try in.readAllBytes() finally in.close()
-          sendOk(client, "PUT", s"$base/sync/blocks/$blockName", bytes)
-        }
     }
     SyncService.inParallel(parallelism, pushSlices ++ pushCkptFiles ++ pushBlocks)
     val dataCopied = pushSlices.size

@@ -6,8 +6,12 @@ import java.util.Base64
 
 import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveInputStream, TarArchiveOutputStream}
 import org.apache.commons.compress.compressors.gzip.{GzipCompressorInputStream, GzipCompressorOutputStream}
+import org.apache.hadoop.fs.Path
 import org.json4s._
 import org.json4s.jackson.JsonMethods
+
+import graft.chain.MetadataChain
+import graft.model.MetadataBlock
 
 /**
  * Message model + JSON codec of the Smart Transfer Protocol — the phased
@@ -49,6 +53,29 @@ object SmartProtocol {
 
   /** (blockFileName, bytes), oldest-first. */
   final case class BlocksBatch(blocks: Seq[(String, Array[Byte])])
+
+  /** The transfer plan of `delta` (oldest first, read from `chain`) and the
+    * objects it references: each distinct data slice with its file size,
+    * then each distinct checkpoint. The push request and the pull answer
+    * both carry this plan. */
+  private[sync] def planOf(
+      chain: MetadataChain,
+      delta: Seq[(MetadataBlock, String)]
+  ): (TransferPlan, Seq[ObjectFileReference]) = {
+    def len(p: Path): Long = chain.fs.getFileStatus(p).getLen
+    val objects = delta.map(b => MetadataChain.objectsOf(b._1.event))
+    val data = objects.flatMap(_._1).distinctBy(_.physicalHash)
+    val refs =
+      data.map(a =>
+        ObjectFileReference("DataSlice", a.physicalHash, len(chain.dataFile(a.physicalHash)))) ++
+        objects.flatMap(_._2).distinctBy(_.name)
+          .map(c => ObjectFileReference("Checkpoint", c.name, c.sizeBytes))
+    val blockBytes = delta.map { case (b, h) =>
+      len(new Path(chain.blocksDir, MetadataChain.blockFileName(b.sequenceNumber, h)))
+    }
+    (TransferPlan(delta.size.toLong, refs.size.toLong, data.map(_.numRecords).sum,
+      blockBytes.sum, refs.map(_.size).sum), refs)
+  }
 
   // ------------------------------------------------------------------ JSON
 

@@ -10,7 +10,6 @@ import org.apache.hadoop.fs.Path
 import org.json4s._
 
 import graft.chain.MetadataChain
-import graft.model.MetadataEvent.{AddData, ExecuteTransform}
 
 /**
  * Client half of the Smart Transfer Protocol (reference:
@@ -23,8 +22,10 @@ import graft.model.MetadataEvent.{AddData, ExecuteTransform}
  * "client's data on what the head is got out of date" flow,
  * messages.rs:143-149).
  *
- * Same object discipline as [[HttpSync]]: every downloaded object is
- * verified against its content address, staging is write-temp+rename (a
+ * Same object discipline as [[HttpSync]]: every downloaded block passes
+ * [[MetadataChain.acceptBlock]] and the delta [[MetadataChain.requireLinked]],
+ * every object is verified against its content address and lands only under
+ * the name the client asked for, staging is write-temp+rename (a
  * present file is complete — crash resume for free), blocks land after the
  * objects they reference, and the head ref moves last (pull) or through the
  * server's validated CAS commit (push).
@@ -64,23 +65,6 @@ object SmartSync {
       HttpResponse.BodyHandlers.ofByteArray())
     require(resp.statusCode() == 200,
       s"PUT $url -> HTTP ${resp.statusCode()}: ${new String(resp.body(), UTF_8)}")
-  }
-
-  private val BlockNamePattern = """\d{6,}-[0-9a-f]{64}\.json""".r
-
-  /** Verify + parse one batch entry from the UNTRUSTED remote: strict name
-    * shape (it later lands under blocks/), content address, declared seq. */
-  private def verifyBlock(blockName: String, bytes: Array[Byte]): graft.model.MetadataBlock = {
-    require(BlockNamePattern.matches(blockName),
-      s"batch entry '$blockName' is not a valid block name")
-    val (seq, hash) = MetadataChain.parseName(new Path(blockName))
-    require(MetadataChain.sha256Hex(bytes) == hash,
-      s"pushed batch block $blockName fails its content address")
-    val block = org.json4s.jackson.Serialization.read[graft.model.MetadataBlock](
-      new String(bytes, UTF_8))(MetadataChain.formats, manifest[graft.model.MetadataBlock])
-    require(block.sequenceNumber == seq,
-      s"block declares seq ${block.sequenceNumber} but is named $seq")
-    block
   }
 
   /** Compare the local chain against a smart-served one WITHOUT transferring
@@ -171,43 +155,25 @@ object SmartSync {
       // metadata phase
       val metaResp = ws.call(compact(JObject())) // DatasetPullMetadataRequest {}
       val batch = parseBlocksBatch(parse(metaResp) \ "blocks")
-      val blocks = batch.blocks.map { case (n, b) => (n, b, verifyBlock(n, b)) }
-      // the delta must extend our committed head contiguously AND be
-      // internally prev-hash-linked before anything is written: per-block
-      // content addresses prove nothing about ORDER, and committing a head
-      // over a gapped or shuffled batch would corrupt the local chain
-      // (UNTRUSTED remote discipline — same as the HTTP pull path)
-      var expectSeq = localBlocks.lastOption.map(_._1.sequenceNumber + 1).getOrElse(0L)
-      var expectPrev: Option[String] = localBlocks.lastOption.map(_._2)
-      blocks.foreach { case (name, _, b) =>
-        require(b.sequenceNumber == expectSeq,
-          s"batch block $name has seq ${b.sequenceNumber}, chain expects $expectSeq")
-        require(b.prevBlockHash == expectPrev,
-          s"batch block $name prev-links to ${b.prevBlockHash}, chain expects $expectPrev")
-        expectPrev = Some(MetadataChain.parseName(new Path(name))._2)
-        expectSeq += 1
-      }
+      val blocks = batch.blocks.map { case (n, b) => (n, b, MetadataChain.acceptBlock(n, b)) }
+      // per-block content addresses prove nothing about ORDER: the delta
+      // must continue our committed head before anything is written
+      MetadataChain.requireLinked(
+        localBlocks.lastOption.map { case (b, h) => (b.sequenceNumber, h) }, blocks.map(_._3))
 
       // objects phase: ask for every data slice + checkpoint the delta
       // references that is not already staged locally (resume skips them)
-      val events = blocks.map(_._3.event)
-      val dataRefs = events.flatMap {
-        case a: AddData          => Seq(a)
-        case e: ExecuteTransform => e.newData.toSeq
-        case _                   => Nil
-      }.distinctBy(_.physicalHash)
+      val objects = blocks.map(b => MetadataChain.objectsOf(b._3._1.event))
+      val dataRefs = objects.flatMap(_._1).distinctBy(_.physicalHash)
         .filterNot(a => local.fs.exists(local.dataFile(a.physicalHash)))
       // checkpoints are re-fetched even if a local dir exists: a crashed
       // earlier pull can leave a PARTIAL dir, and dir presence (unlike a
       // content-addressed file) proves nothing — per-entry writes are
       // atomic and idempotent, and bundles are small
-      val ckptRefs = events.flatMap {
-        case e: ExecuteTransform => e.newCheckpoint.toSeq
-        case _                   => Nil
-      }.distinctBy(_.name)
+      val ckptRefs = objects.flatMap(_._2).distinctBy(_.name)
       ckptRefs.foreach { c =>
-        require(c.name.nonEmpty && !c.name.contains("/") && !c.name.contains("\\")
-          && c.name != "." && c.name != "..", s"unsafe checkpoint name '${c.name}'")
+        require(MetadataChain.isSafeRelPath(c.name) && !c.name.contains("/"),
+          s"checkpoint name '${c.name}' from remote is not a safe relative path")
       }
 
       val wanted =
@@ -228,19 +194,23 @@ object SmartSync {
           }
           require(got.size == page.size,
             s"server returned ${got.size} strategies for ${page.size} objects")
+          // each strategy must name an object we asked for: its name picks
+          // the local file or directory it lands in
+          val asked = page.map(r => (r.objectType, r.physicalHash)).toSet
+          got.foreach { case (ref, _) =>
+            require(asked.contains((ref.objectType, ref.physicalHash)),
+              s"server answered for unrequested ${ref.objectType} '${ref.physicalHash}'")
+          }
           got
         }
         val fetches: Seq[() => Unit] = strategies.map { case (ref, from) => () =>
           ref.objectType match {
             case "Checkpoint" =>
-              // bundle download: unpack under checkpoints/<name> with the
-              // same traversal validation as the HTTP pull path
+              // bundle download: unpack under checkpoints/<name>
               val entries = untarGz(get(client, from.url))
               val dir = new Path(local.checkpointsDir, ref.physicalHash)
               entries.foreach { case (rel, bytes) =>
-                require(rel.nonEmpty && !rel.startsWith("/") && !rel.contains("\\")
-                  && !rel.contains(":") &&
-                  rel.split("/", -1).forall(s => s.nonEmpty && s != "." && s != ".."),
+                require(MetadataChain.isSafeRelPath(rel),
                   s"bundle entry '$rel' is not a safe relative path")
                 local.writeObjectAtomic(new Path(dir, rel), bytes)
               }
@@ -258,8 +228,7 @@ object SmartSync {
       blocks.foreach { case (blockName, bytes, _) =>
         local.writeObjectAtomic(new Path(local.blocksDir, blockName), bytes)
       }
-      val (lastName, _, lastBlock) = blocks.last
-      val lastHash = MetadataChain.parseName(new Path(lastName))._2
+      val (lastBlock, lastHash) = blocks.last._3
       local.setHead(lastBlock.sequenceNumber, lastHash)
       SyncService.Updated(oldHead.map(_._2), lastHash, blocks.size, dataRefs.size)
     } finally ws.close()
@@ -303,34 +272,12 @@ object SmartSync {
         if (delta.isEmpty && guess == srcBlocks.lastOption.map(_._2))
           return Right(SyncService.UpToDate)
 
-        val dataRefs = delta.flatMap {
-          case (b, _) => b.event match {
-            case a: AddData          => Seq(a)
-            case e: ExecuteTransform => e.newData.toSeq
-            case _                   => Nil
-          }
-        }.distinctBy(_.physicalHash)
-        val ckptRefs = delta.flatMap {
-          case (b, _) => b.event match {
-            case e: ExecuteTransform => e.newCheckpoint.toSeq
-            case _                   => Nil
-          }
-        }.distinctBy(_.name)
-        def blockName(b: graft.model.MetadataBlock, h: String) =
-          f"${b.sequenceNumber}%06d-$h.json"
+        val (plan, objs) = planOf(local, delta)
         val blockBytes = delta.map { case (b, h) =>
-          val fin = local.fs.open(new Path(local.blocksDir, blockName(b, h)))
-          val bytes = try fin.readAllBytes() finally fin.close()
-          blockName(b, h) -> bytes
+          val name = MetadataChain.blockFileName(b.sequenceNumber, h)
+          val fin = local.fs.open(new Path(local.blocksDir, name))
+          try name -> fin.readAllBytes() finally fin.close()
         }
-        val dataSizes = dataRefs.map(a =>
-          local.fs.getFileStatus(local.dataFile(a.physicalHash)).getLen)
-        val plan = TransferPlan(
-          numBlocks = delta.size.toLong,
-          numObjects = (dataRefs.size + ckptRefs.size).toLong,
-          numRecords = dataRefs.map(_.numRecords).sum,
-          bytesInRawBlocks = blockBytes.map(_._2.length.toLong).sum,
-          bytesInRawObjects = dataSizes.sum + ckptRefs.map(_.sizeBytes).sum)
 
         val initial = ws.call(renderPushRequest(guess, plan, force))
         val parsedInitial = parse(initial)
@@ -355,10 +302,6 @@ object SmartSync {
         // bounded-pool uploads, and its own Complete progress handshake
         var slicesUploaded = 0
         if (delta.nonEmpty) {
-          val objs =
-            dataRefs.zip(dataSizes).map { case (a, sz) =>
-              ObjectFileReference("DataSlice", a.physicalHash, sz) } ++
-              ckptRefs.map(c => ObjectFileReference("Checkpoint", c.name, c.sizeBytes))
           val pages = objs.grouped(objectBatchSize).toSeq
           pages.zipWithIndex.foreach { case (page, i) =>
             val more = i < pages.size - 1

@@ -2,13 +2,11 @@ package graft.sync
 
 import java.io.DataInputStream
 import java.net.{InetAddress, ServerSocket, Socket}
-import java.nio.charset.StandardCharsets.UTF_8
 
 import org.json4s._
 
 import graft.adapter.RestServer
 import graft.chain.MetadataChain
-import graft.model.MetadataEvent.{AddData, ExecuteTransform}
 
 /**
  * Server half of the Smart Transfer Protocol — the phased WebSocket
@@ -23,14 +21,15 @@ import graft.model.MetadataEvent.{AddData, ExecuteTransform}
  * (`HttpDownload`/`HttpUpload`, messages.rs:104-108,246-251), so the WS
  * session carries only the negotiation and the packed metadata batch.
  *
- * Pull: DatasetPullRequest → transfer plan → (metadata request → tar.gz
- * blocks batch) → objects requests → download strategies, until the client
- * closes. Push: DatasetPushRequest (CAS against the served head) →
- * metadata batch staged → objects requests → upload strategies
+ * Pull: DatasetPullRequest → transfer plan ([[SmartProtocol.planOf]]) →
+ * (metadata request → tar.gz blocks batch) → objects requests → download
+ * strategies, until the client closes. Push: DatasetPushRequest (CAS
+ * against the served head) → metadata batch staged (each block through
+ * [[MetadataChain.acceptBlock]]) → objects requests → upload strategies
  * (`SkipUpload` for staged objects — resume for free) → upload-progress
  * responses until Complete → DatasetPushComplete → validated head commit
- * (same commit path as the HTTP push surface: linked chain, staged objects,
- * fast-forward/CAS) → confirmation.
+ * (`RestServer.syncCommitHead`, shared with the HTTP push surface: linked
+ * chain, staged objects, fast-forward/CAS) → confirmation.
  */
 final class SmartTransferServer(rest: RestServer, port: Int = 0) {
   import SmartProtocol._
@@ -146,43 +145,15 @@ final class SmartTransferServer(rest: RestServer, port: Int = 0) {
     }
     val pending = all.slice(beginIdx + 1, stopIdx + 1)
 
-    val dataRefs = pending.flatMap {
-      case (b, _) => b.event match {
-        case a: AddData          => Seq(a)
-        case e: ExecuteTransform => e.newData.toSeq
-        case _                   => Nil
-      }
-    }.distinctBy(_.physicalHash)
-    val ckptRefs = pending.flatMap {
-      case (b, _) => b.event match {
-        case e: ExecuteTransform => e.newCheckpoint.toSeq
-        case _                   => Nil
-      }
-    }.distinctBy(_.name)
-    def blockFileName(b: graft.model.MetadataBlock, h: String) =
-      f"${b.sequenceNumber}%06d-$h.json"
-    val blockSizes = pending.map { case (b, h) =>
-      chain.fs.getFileStatus(
-        new org.apache.hadoop.fs.Path(chain.blocksDir, blockFileName(b, h))).getLen
-    }
-    val dataSizes = dataRefs.map(a =>
-      chain.fs.getFileStatus(chain.dataFile(a.physicalHash)).getLen)
-    val plan = TransferPlan(
-      numBlocks = pending.size.toLong,
-      numObjects = (dataRefs.size + ckptRefs.size).toLong,
-      numRecords = dataRefs.map(_.numRecords).sum,
-      bytesInRawBlocks = blockSizes.sum,
-      bytesInRawObjects = dataSizes.sum + ckptRefs.map(_.sizeBytes).sum)
-    Ws.writeText(out, ok(JObject("transfer_plan" -> renderPlan(plan))))
+    Ws.writeText(out, ok(JObject("transfer_plan" -> renderPlan(planOf(chain, pending)._1))))
 
     if (pending.nonEmpty) {
       // metadata phase: one tar.gz batch of the pending block files
       if (Ws.readText(in, out).isEmpty) return // DatasetPullMetadataRequest {}
       val blockBytes = pending.map { case (b, h) =>
-        val p = new org.apache.hadoop.fs.Path(chain.blocksDir, blockFileName(b, h))
-        val fin = chain.fs.open(p)
-        val bytes = try fin.readAllBytes() finally fin.close()
-        blockFileName(b, h) -> bytes
+        val name = MetadataChain.blockFileName(b.sequenceNumber, h)
+        val fin = chain.fs.open(new org.apache.hadoop.fs.Path(chain.blocksDir, name))
+        try name -> fin.readAllBytes() finally fin.close()
       }
       Ws.writeText(out, compact(JObject(
         "blocks" -> renderBlocksBatch(BlocksBatch(blockBytes)))))
@@ -226,8 +197,8 @@ final class SmartTransferServer(rest: RestServer, port: Int = 0) {
     }
     Ws.writeText(out, ok(JObject()))
 
-    // metadata phase: stage every pushed block (content-address + declared
-    // sequence verified); the head moves only at the complete phase
+    // metadata phase: stage every pushed block that MetadataChain.acceptBlock
+    // accepts; the head moves only at the complete phase
     val metaMsg = Ws.readText(in, out).getOrElse(return)
     val batch = parseBlocksBatch(parse(metaMsg) \ "new_blocks")
     val chain: MetadataChain = rest.syncPushChain(name) match {
@@ -242,22 +213,15 @@ final class SmartTransferServer(rest: RestServer, port: Int = 0) {
     }
     var lastBlock: Option[(Long, String)] = None
     batch.blocks.foreach { case (blockName, bytes) =>
-      val (seq, hash) = MetadataChain.parseName(new org.apache.hadoop.fs.Path(blockName))
-      val got = MetadataChain.sha256Hex(bytes)
-      if (got != hash) {
-        Ws.writeText(out, internalErr("Push(MetadataRequest)",
-          s"block $blockName hashes to $got, not its address"))
-        return
-      }
-      val block = org.json4s.jackson.Serialization.read[graft.model.MetadataBlock](
-        new String(bytes, UTF_8))(MetadataChain.formats, manifest[graft.model.MetadataBlock])
-      if (block.sequenceNumber != seq) {
-        Ws.writeText(out, internalErr("Push(MetadataRequest)",
-          s"block declares seq ${block.sequenceNumber} but is named $seq"))
-        return
-      }
+      val (block, hash) =
+        try MetadataChain.acceptBlock(blockName, bytes)
+        catch {
+          case e: Exception =>
+            Ws.writeText(out, internalErr("Push(MetadataRequest)", e.getMessage))
+            return
+        }
       chain.writeObjectAtomic(new org.apache.hadoop.fs.Path(chain.blocksDir, blockName), bytes)
-      lastBlock = Some((seq, hash))
+      lastBlock = Some((block.sequenceNumber, hash))
     }
     Ws.writeText(out, ok(JObject()))
 

@@ -5,7 +5,6 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 import graft.chain.MetadataChain
 import graft.model.MetadataBlock
-import graft.model.MetadataEvent.{AddData, ExecuteTransform}
 
 /**
  * Dataset synchronization between two Hadoop-FS locations — the role of the
@@ -144,7 +143,8 @@ object SyncService {
       case _ =>
         // force: make dst mirror src — copy whatever block files dst is
         // missing; its extra blocks become unreachable after the head move.
-        val have = dst.blockFiles().map(p => MetadataChain.parseName(p)._2).toSet
+        val have = dst.blockFiles().flatMap(p => MetadataChain.parseBlockName(p.getName))
+          .map(_._2).toSet
         srcBlocks.filterNot { case (_, h) => have.contains(h) }
     }
 
@@ -154,16 +154,9 @@ object SyncService {
     // kept globally: data + checkpoints land first, block files second, the
     // head (the commit point) moves last — a crash at any point leaves only
     // objects no committed block references, and the re-run resumes.
-    val events = toTransfer.map(_._1.event)
-    val dataRefs = events.flatMap {
-      case a: AddData          => Seq(a.physicalHash)
-      case e: ExecuteTransform => e.newData.map(_.physicalHash).toSeq
-      case _                   => Nil
-    }.distinct
-    val ckptRefs = events.flatMap {
-      case e: ExecuteTransform => e.newCheckpoint.map(_.name).toSeq
-      case _                   => Nil
-    }.distinct
+    val objects = toTransfer.map(b => MetadataChain.objectsOf(b._1.event))
+    val dataRefs = objects.flatMap(_._1).map(_.physicalHash).distinct
+    val ckptRefs = objects.flatMap(_._2).map(_.name).distinct
 
     def listFiles(p: Path): Seq[Path] =
       if (!src.fs.exists(p)) Nil
@@ -191,7 +184,7 @@ object SyncService {
           }
         }
     val blockCopies: Seq[() => Unit] = toTransfer.map { case (block, hash) => () =>
-      val blockName = f"${block.sequenceNumber}%06d-$hash.json"
+      val blockName = MetadataChain.blockFileName(block.sequenceNumber, hash)
       if (copyFile(src.fs, new Path(src.blocksDir, blockName),
           dst.fs, new Path(dst.blocksDir, blockName), dst.root) && verify) {
         val in = dst.fs.open(new Path(dst.blocksDir, blockName))
